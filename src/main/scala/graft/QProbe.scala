@@ -40,7 +40,7 @@ object QProbe {
     if (sys.env.contains("QPROBE_JOBS"))
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
-          val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+          val t0 = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
           val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -53,9 +53,11 @@ object QProbe {
           }
           override def onJobEnd(
               j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = t0.remove(j.jobId)
-            println(f"[job] ${j.jobId}%3d wall=${(j.time - s) / 1e3}%6.2f " +
-              s"${desc.remove(j.jobId)}")
+            // a start event the listener bus dropped (or one from before
+            // the listener attached) leaves no start time: skip the line
+            val d = desc.remove(j.jobId)
+            Option(t0.remove(j.jobId)).foreach(s =>
+              println(f"[job] ${j.jobId}%3d wall=${(j.time - s) / 1e3}%6.2f $d"))
           }
         })
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -97,12 +99,6 @@ object QProbe {
           s" exactChecks=${Option(SpatialJoin.lastExactChecks).map(_.value).getOrElse(-1L)}" +
           s" bboxPass=${Option(SpatialJoin.lastBboxPass).map(_.value).getOrElse(-1L)}" +
           s" cellPass=${Option(SpatialJoin.lastCellPass).map(_.value).getOrElse(-1L)}")
-      if (SpatialJoin.lastKindNs != null &&
-          SpatialJoin.lastKindN.exists(_.value > 0))
-        for (k <- 0 until 9 if SpatialJoin.lastKindN(k).value > 0)
-          println(f"[kind] ${k / 3}x${k % 3} n=${SpatialJoin.lastKindN(k).value}%9d " +
-            f"cpu_s=${SpatialJoin.lastKindNs(k).value / 1e9}%8.2f " +
-            f"us_each=${SpatialJoin.lastKindNs(k).value / 1e3 / math.max(1, SpatialJoin.lastKindN(k).value)}%8.2f")
     }
     spark.stop()
   }

@@ -102,12 +102,6 @@ object SpatialBench {
           s"bboxPass=${Option(SpatialJoin.lastBboxPass).map(_.value).getOrElse(-1L)} " +
           s"cellPass=${Option(SpatialJoin.lastCellPass).map(_.value).getOrElse(-1L)} " +
           s"isectMiss=${Option(SpatialJoin.lastIsectMiss).map(_.value).getOrElse(-1L)}")
-      if (SpatialJoin.lastKindNs != null &&
-          SpatialJoin.lastKindN.exists(_.value > 0))
-        for (k <- 0 until 9 if SpatialJoin.lastKindN(k).value > 0)
-          println(f"[kind] ${k / 3}x${k % 3} n=${SpatialJoin.lastKindN(k).value}%9d " +
-            f"cpu_s=${SpatialJoin.lastKindNs(k).value / 1e9}%8.2f " +
-            f"us_each=${SpatialJoin.lastKindNs(k).value / 1e3 / math.max(1, SpatialJoin.lastKindN(k).value)}%8.2f")
       Thread.sleep(500)
       stages.forEach(s => println("[stage] " + s))
       spark.stop()

@@ -131,10 +131,9 @@ object SpatialChild {
           (dt, c)
         } else {
           if (!sys.env.get("GRAFT_PLAN_WARM").contains("off")) {
-            val (cfgR, lvlsR, _) =
-              SpatialJoin.coverSpec(geoms, SpatialConfig())
+            val p = SpatialJoin.plan(geoms, SpatialConfig())
             SpatialJoin.fusedPairs(spark, SynthGeo.dataset(spark, 20000),
-              cfgR, lvlsR, direct = true).count()
+              p.cfg, p.levels, direct = true).count()
           }
           cpuNs.set(0L)
           val t0 = System.nanoTime()

@@ -68,19 +68,15 @@ case class DecodeGeomExpr(child: Expression)
       newChild: Expression): DecodeGeomExpr = copy(child = newChild)
 }
 
-/** Flat multi-level cell enumeration for one padded bbox.
+/** Flat multi-level cell enumeration for one padded bbox: the engine's
+  * ONE cover enumeration, behind both [[SpatialJoin.cellCover]] and the
+  * fused kernel's packed cover.
   *
-  * Replaces the filter(levels)/explode + 4×floor + sequence/explode ×2
-  * chain in the cover stage: that chain allocates three ArrayData and a
-  * boxed lambda result per cover row and runs three Generate loops, which
-  * showed up as GC ≈ CPU in the cover/exchange stage profile. One call
-  * here emits every (level ≥ nlvl, active) cell key into a primitive
-  * long[] with zero boxing; the caller explodes that single array.
-  *
-  * Semantics are EXACTLY [[SpatialJoin.cellCoverSql]]'s: double division
-  * by the level cell size, floor toward -inf, the same key packing
-  * (level << 56, biased 28-bit cx/cy). Pinned by the EngineOpsSpec
-  * enumeration tests.
+  * One call emits every (level ≥ nlvl, active) cell key into a primitive
+  * long[] with zero boxing; the caller explodes that single array. Double
+  * division by the level cell size, floor toward -inf, key packing
+  * level << 56 plus biased 28-bit cx/cy. Pinned by the EngineOpsSpec
+  * enumeration tests against a plain-Scala re-derivation.
   */
 object CellEnum {
   import SpatialJoin.{CELL_BIAS, CELL_LVL_SHIFT, CELL_XY_BITS, LEVEL_FACTOR_BITS}
@@ -204,8 +200,8 @@ case class PipExpr(x: Expression, y: Expression,
       ringEnds = newChildren(3))
 }
 
-/** `CellEnum.cells` as a codegen'd Catalyst expression over the packed
-  * cover projection's (minX, minY, maxX, maxY, nlvl) columns; cs/lvlMask/w2
+/** `CellEnum.cells` as a codegen'd Catalyst expression over a cover's
+  * (minX, minY, maxX, maxY, nlvl) columns; cs/lvlMask/w2
   * are plan-time constants. Children are the engine's own non-nullable int
   * columns, so null handling is skipped by construction. */
 case class CellListExpr(minX: Expression, minY: Expression,

@@ -77,10 +77,9 @@ object SpatialIndex {
     val cached = geoms.storageLevel != StorageLevel.NONE
     val g0 = if (cached) geoms else geoms.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE stats pass (r6; formerly coverSpec + a second agg + an
-      // ungated dup-scan probe = 3-4 jobs): cell size, levels, part/side
-      // extrema and the P9 gate all come from SpatialJoin.inputStats, and
-      // the dup-scan probe only runs when the gate says a duplicate can
+      // ONE stats pass (r6; formerly 3-4 jobs): cell size, levels,
+      // part/side extrema and the P9 gate all come from SpatialJoin.plan,
+      // and the dup-scan probe only runs when the gate says a duplicate can
       // exist — the same planning shape as SpatialJoin.run.
       // The refs emptiness probe is independent of the stats result, so it
       // overlaps the stats job on a driver future (same pattern as run()'s
@@ -96,11 +95,10 @@ object SpatialIndex {
           finally spark.sparkContext.clearCallSite()
         }
       }
-      val st = SpatialJoin.inputStats(g0, cfg)
-      val cs = if (cfg.cellSize > 0) cfg.cellSize
-        else SpatialJoin.cellSizeFor(st.meanExt, cfg.withinDist >= 0)
-      val cfgCs = cfg.copy(cellSize = cs)
-      val lvls = st.levelsFor(cs)
+      val pl = SpatialJoin.plan(g0, cfg)
+      val st = pl.stats
+      val cfgCs = pl.cfg
+      val lvls = pl.levels
       val bigMultis = st.bigMultis
       val allSingle = st.allSingle
       val hasSides = st.hasSides

@@ -10,10 +10,6 @@ final case class SpatialConfig(
     mode: String = "predicates", // predicates | de9im | distance
     withinDist: Double = -1.0,
     selfJoin: Boolean = true,
-    /** UNUSED since round 2 (kept for source compat): big geometries now
-      * get a coarser-level cell cover instead of a broadcast join — see
-      * SpatialJoin.cellCover. */
-    bigCellThreshold: Int = 64,
     /** override the adaptive cell size (int coords); <=0 = adaptive. */
     cellSize: Long = -1L,
     /** duplicate->reference rewrite (P9): lines/polygons with at least
@@ -100,18 +96,9 @@ object SpatialJoin {
     * pair scans linear-ish): 1M@32c 4.44→3.89 s, 4M@32c 7.32→6.26 s,
     * 1M@1c 11.6→10.5 s, relations invariant at every multiplier. */
   def cellSizeFor(meanExtent: Double, distMode: Boolean): Long = {
-    val mult = if (distMode) 1.0
-      else sys.env.getOrElse("GRAFT_CELL_MULT", "8.0").toDouble
+    val mult = if (distMode) 1.0 else 8.0
     val target = math.max(meanExtent * mult, WORLD_W / (1L << 24).toDouble)
     math.min(math.max(target.toLong, 16L), (WORLD_W / 4.0).toLong)
-  }
-
-  def adaptiveCellSize(padded: DataFrame, distMode: Boolean = false): Long = {
-    val row = padded.agg(
-      avg(greatest(col("maxX") - col("minX"), col("maxY") - col("minY"))
-        .cast("double"))).head()
-    val meanExtent = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-    cellSizeFor(meanExtent, distMode)
   }
 
   /** bbox padding for within-distance mode (reference getPaddedBoundingBox,
@@ -170,73 +157,37 @@ object SpatialJoin {
     coalesce(terms :+ lit(15): _*)
   }
 
-  /** Output schema of [[cellCover]]: the SubGeom columns (bbox PADDED in
-    * distance mode) plus (nlvl, lvl, cell). */
-  val coverSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    org.apache.spark.sql.Encoders.product[SubGeom].schema
-      .add("nlvl", IntegerType, nullable = false)
-      .add("lvl", IntegerType, nullable = false)
-      .add("cell", LongType, nullable = false)
+  /** Cell keys of a (padded) bbox as ONE primitive-long[] expression
+    * ([[CellListExpr]] over [[CellEnum.cells]]): the bbox-range cover at
+    * every active level at or above the native level `nlvl`, the level
+    * packed into the key. Both covers explode this one column: a Generate
+    * per level/x/y boxes per-row arrays, which showed GC ≈ CPU in the
+    * cover stage's profile (BASELINE.md round-2 continuation 5). */
+  private def cellsCol(minX: Column, minY: Column, maxX: Column,
+      maxY: Column, nlvl: Column, cs: Long, activeLevels: Seq[Int]): Column = {
+    import org.apache.spark.sql.GraftInternal.{colOf, exprOf}
+    val lvlMask = activeLevels.distinct.foldLeft(0)((m, l) => m | (1 << l))
+    colOf(CellListExpr(exprOf(minX), exprOf(minY), exprOf(maxX),
+      exprOf(maxY), exprOf(nlvl), cs, lvlMask, WORLD_W / 2))
   }
 
   /** Multi-level cell cover: each sub-geometry emits its bbox-range cover
     * at its native level and at every coarser ACTIVE level (levels some
     * geometry is native to), with the level packed into the cell key. A
     * pair (a,b) is examined exactly once: in the first common cell at
-    * level max(a.nlvl, b.nlvl). Returns (exploded cover, cell size).
-    *
-    * Dispatches to [[cellCoverSql]] by default (see its doc for the
-    * measured 5x verdict); the mapPartitions generator below is retained
-    * as the GRAFT_COVER=gen measurement alternate, pinned to identical
-    * output by the EngineOpsSpec enumeration test. */
-  /** Catalyst-chain cover — the DEFAULT. Measured 5x faster than the
-    * hand-written mapPartitions generator at 1 core (4.2 vs 22 stage
-    * cpu-s per 1M-geom cover): the pad/nlvl/explode chain stays inside
-    * ONE WholeStageCodegen span (generate nodes are codegen'd in Spark 4),
-    * so nothing materializes between steps, while the generator pays a
-    * generic UnsafeProjection whose array writes go element-by-element
-    * through boxed ArrayData fields. Kept measurable via GRAFT_COVER=gen. */
-  private def cellCoverSql(geoms: Dataset[SubGeom], cfg: SpatialConfig,
+    * level max(a.nlvl, b.nlvl). Returns the SubGeom columns (bbox PADDED
+    * in distance mode) plus (nlvl, cell, lvl), and the cell size. */
+  private[engine] def cellCover(geoms: Dataset[SubGeom], cfg: SpatialConfig,
       activeLevels: Seq[Int]): (DataFrame, Long) = {
-    val padded = padDf(geoms.toDF(), cfg)
+    require(cfg.cellSize > 0, "cellCover needs a resolved cellSize")
     val cs = cfg.cellSize
-    val lvls = activeLevels.distinct.sorted
-    val lvlArr = array(lvls.map(lit(_)): _*)
-    val w2 = lit(WORLD_W / 2)
-    val csL = (lit(cs) *
-      expr(s"shiftleft(1L, lvl * $LEVEL_FACTOR_BITS)")).cast("double")
-    val exploded = padded
+    val cover = padDf(geoms.toDF(), cfg)
       .withColumn("nlvl", nlvlCol(cs))
-      .withColumn("lvl", explode(filter(lvlArr, l => l >= col("nlvl"))))
-      .withColumn("cx0", floor((col("minX") + w2) / csL))
-      .withColumn("cx1", floor((col("maxX") + w2) / csL))
-      .withColumn("cy0", floor((col("minY") + w2) / csL))
-      .withColumn("cy1", floor((col("maxY") + w2) / csL))
-      .withColumn("cx", explode(sequence(col("cx0"), col("cx1"))))
-      .withColumn("cy", explode(sequence(col("cy0"), col("cy1"))))
-      .withColumn("cell", shiftleft(col("lvl").cast("long"), CELL_LVL_SHIFT) +
-        (col("cx") + lit(CELL_BIAS)) * lit(1L << CELL_XY_BITS) +
-        (col("cy") + lit(CELL_BIAS)))
-      .drop("cx0", "cx1", "cy0", "cy1", "cx", "cy")
-    (exploded, cs)
+      .withColumn("cell", explode(cellsCol(col("minX"), col("minY"),
+        col("maxX"), col("maxY"), col("nlvl"), cs, activeLevels)))
+      .withColumn("lvl", shiftright(col("cell"), CELL_LVL_SHIFT).cast("int"))
+    (cover, cs)
   }
-
-  /** Cover chain for the FUSED kernel: emits the packed 6-column shuffle
-    * row (cell, gid, meta, enc, bb0, bb1) directly. Identical cell
-    * enumeration to [[cellCoverSql]]; the difference is WHERE the packing
-    * projection sits. meta/enc/bb0/bb1 depend only on per-geometry values,
-    * so they are projected BELOW the explode chain and evaluate once per
-    * sub-geometry — not once per cover row (~3x on the 1M-geom mix, and
-    * the delta-varint coord encoding is the cover stage's biggest
-    * expression). Generate's codegen evaluates required child columns
-    * before its emission loop, so within the single WholeStageCodegen span
-    * the packed values are computed once and reused across the row's
-    * cells. */
-  private[engine] def cellCoverPacked(geoms: Dataset[SubGeom], cfg: SpatialConfig,
-      activeLevels: Seq[Int]): (DataFrame, Long) =
-    (coverFromPacked(packedRows(geoms, cfg), cfg.cellSize, activeLevels),
-      cfg.cellSize)
 
   /** Packed per-sub-geometry projection (gid, meta, enc, bb0, bb1): the
     * kernel shuffle row minus the cell key — one row per sub-geometry,
@@ -268,30 +219,24 @@ object SpatialJoin {
           .as("bb1"))
   }
 
-  /** (cell, gid, meta, enc, bb0, bb1) cover over [[packedRows]] output:
-    * bbox ints and native level are recovered from the bb0/bb1/meta
-    * packing (a few codegen'd shifts) and fed to the single-expression
-    * enumeration. The whole level-filter/explode + floor +
-    * sequence/explode×2 chain is ONE primitive-long[] expression + ONE
-    * explode: the old chain's three Generate loops and per-row
-    * ArrayData/boxing showed GC ≈ CPU in this stage's profile
-    * (BASELINE.md round-2 continuation 5). */
+  /** Cover for the FUSED kernel: the packed 6-column shuffle row (cell,
+    * gid, meta, enc, bb0, bb1) over [[packedRows]] output. Same cell
+    * enumeration as [[cellCover]]; bbox ints and native level are
+    * recovered from the bb0/bb1/meta packing (a few codegen'd shifts).
+    * meta/enc/bb0/bb1 depend only on per-geometry values, so they sit
+    * BELOW the explode and evaluate once per sub-geometry — not once per
+    * cover row (~3x on the 1M-geom mix, and the delta-varint coord
+    * encoding is the cover stage's biggest expression). */
   private[engine] def coverFromPacked(packed: DataFrame, cs: Long,
       activeLevels: Seq[Int]): DataFrame = {
-    val lvlMask = activeLevels.distinct.foldLeft(0)((m, l) => m | (1 << l))
     // sign-extended halves via shift pairs: a plain long->int cast throws
     // under ANSI (Spark 4 default) because the packed word overflows int
     def hi(c: Column) = shiftright(c, 32).cast("int")
     def lo(c: Column) = shiftright(shiftleft(c, 32), 32).cast("int")
-    val cellsCol = org.apache.spark.sql.GraftInternal.colOf(CellListExpr(
-      org.apache.spark.sql.GraftInternal.exprOf(hi(col("bb0"))),
-      org.apache.spark.sql.GraftInternal.exprOf(lo(col("bb0"))),
-      org.apache.spark.sql.GraftInternal.exprOf(hi(col("bb1"))),
-      org.apache.spark.sql.GraftInternal.exprOf(lo(col("bb1"))),
-      org.apache.spark.sql.GraftInternal.exprOf(
-        shiftright(col("meta"), 3).bitwiseAND(lit(31))),
-      cs, lvlMask, WORLD_W / 2))
-    packed.select(explode(cellsCol).as("cell"), col("gid"), col("meta"),
+    val cells = cellsCol(hi(col("bb0")), lo(col("bb0")), hi(col("bb1")),
+      lo(col("bb1")), shiftright(col("meta"), 3).bitwiseAND(lit(31)), cs,
+      activeLevels)
+    packed.select(explode(cells).as("cell"), col("gid"), col("meta"),
       col("enc"), col("bb0"), col("bb1"))
   }
 
@@ -300,108 +245,9 @@ object SpatialJoin {
     * the cell size, and the active levels. */
   def coverTable(geoms: Dataset[SubGeom], cfg: SpatialConfig = SpatialConfig())
       : (DataFrame, Long, Seq[Int]) = {
-    val (cfg2, lvls, _) = coverSpec(geoms, cfg)
-    val (df, cs) = cellCover(geoms, cfg2, lvls)
-    (df, cs, lvls)
-  }
-
-  private[engine] def cellCover(geoms: Dataset[SubGeom], cfg: SpatialConfig,
-      activeLevels: Seq[Int]): (DataFrame, Long) = {
-    require(cfg.cellSize > 0, "cellCover needs a resolved cellSize")
-    if (!sys.env.get("GRAFT_COVER").contains("gen"))
-      return cellCoverSql(geoms, cfg, activeLevels)
-    val cs = cfg.cellSize
-    val spark = geoms.sparkSession
-    val lvlsArr = activeLevels.distinct.sorted.toArray
-    val wd = cfg.withinDist
-    val schema = coverSchema
-    val w2 = WORLD_W / 2
-
-    val rdd = geoms.toDF().queryExecution.toRdd.mapPartitions { rows =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
-      val proj = UnsafeProjection.create(schema)
-      val out = new SpecificInternalRow(schema)
-      new Iterator[InternalRow] {
-        // enumeration state for the current input row
-        private var active = false
-        private var li = 0 // index into lvlsArr
-        private var nlvl = 0
-        private var pMinX = 0; private var pMinY = 0
-        private var pMaxX = 0; private var pMaxY = 0
-        private var cx = 0L; private var cy = 0L
-        private var cx1 = 0L; private var cy0 = 0L; private var cy1 = 0L
-        private var csL = 0.0
-
-        private def setupLevel(): Unit = {
-          val lvl = lvlsArr(li)
-          csL = (cs << (LEVEL_FACTOR_BITS * lvl)).toDouble
-          cx = math.floor((pMinX + w2) / csL).toLong
-          cx1 = math.floor((pMaxX + w2) / csL).toLong
-          cy0 = math.floor((pMinY + w2) / csL).toLong
-          cy1 = math.floor((pMaxY + w2) / csL).toLong
-          cy = cy0
-          out.setInt(12, lvl)
-        }
-
-        private def loadRow(): Unit = {
-          while (!active && rows.hasNext) {
-            val r = rows.next()
-            var minX = r.getInt(7); var minY = r.getInt(8)
-            var maxX = r.getInt(9); var maxY = r.getInt(10)
-            if (wd >= 0) {
-              // same arithmetic as the padDf UDF (reference
-              // getPaddedBoundingBox, Sweeper.h:350-388)
-              val f = math.max(
-                1.0 / Dist.distFactor(minY / Geo.PREC),
-                1.0 / Dist.distFactor(maxY / Geo.PREC))
-              val pad = math.ceil((wd / 2.0) * f * Geo.PREC).toInt
-              minX -= pad; minY -= pad; maxX += pad; maxY += pad
-            }
-            pMinX = minX; pMinY = minY; pMaxX = maxX; pMaxY = maxY
-            val w = math.max(maxX - minX, maxY - minY).toLong
-            nlvl = levelFor(w, cs)
-            li = 0
-            while (li < lvlsArr.length && lvlsArr(li) < nlvl) li += 1
-            if (li < lvlsArr.length) {
-              // row fields are valid until the next rows.next(); every
-              // emission projects (copies) before that happens
-              out.update(0, r.getUTF8String(0))
-              out.setInt(1, r.getInt(1)); out.setInt(2, r.getInt(2))
-              out.setInt(3, r.getInt(3)); out.setInt(4, r.getInt(4))
-              out.update(5, r.getArray(5)); out.update(6, r.getArray(6))
-              out.setInt(7, minX); out.setInt(8, minY)
-              out.setInt(9, maxX); out.setInt(10, maxY)
-              out.setInt(11, nlvl)
-              setupLevel()
-              active = true
-            }
-          }
-        }
-
-        override def hasNext: Boolean = { loadRow(); active }
-
-        override def next(): InternalRow = {
-          loadRow()
-          val cell = (lvlsArr(li).toLong << CELL_LVL_SHIFT) +
-            (cx + CELL_BIAS) * (1L << CELL_XY_BITS) + (cy + CELL_BIAS)
-          out.setLong(13, cell)
-          val res = proj(out)
-          // advance: cy, then cx, then the next active level
-          cy += 1
-          if (cy > cy1) {
-            cy = cy0; cx += 1
-            if (cx > cx1) {
-              li += 1
-              if (li < lvlsArr.length) setupLevel()
-              else active = false
-            }
-          }
-          res
-        }
-      }
-    }
-    (org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema), cs)
+    val p = plan(geoms, cfg)
+    val (df, cs) = cellCover(geoms, p.cfg, p.levels)
+    (df, cs, p.levels)
   }
 
   private def sideStruct(alias: String): Column = struct(
@@ -418,7 +264,7 @@ object SpatialJoin {
     * set is derivable for ANY cell size (levelFor is monotone in the
     * extent and level thresholds are 8x apart, so a <=2x-wide bucket
     * spans at most one threshold). */
-  private[engine] final case class InputStats(
+  final case class InputStats(
       meanExt: Double, maxExt: Long, bigMultis: Boolean, allSingle: Boolean,
       maxCoordLen: Int, hasSides: Boolean, nRows: Long,
       lvlBuckets: Seq[(Long, Long)]) {
@@ -429,7 +275,7 @@ object SpatialJoin {
       }.distinct.sorted
   }
 
-  private[engine] def inputStats(geoms: Dataset[SubGeom],
+  private def inputStats(geoms: Dataset[SubGeom],
       cfg: SpatialConfig): InputStats = {
     val LVL_BUCKETS = 34 // padded extents fit in 33 bits
     val ext = greatest(col("maxX") - col("minX"), col("maxY") - col("minY"))
@@ -461,27 +307,21 @@ object SpatialJoin {
       })
   }
 
-  /** One pass of cover statistics over the (typically cached) geometries:
-    * resolved cell size, the set of ACTIVE native levels, and whether any
-    * geometry has >63 parts. A second tiny agg runs only when some
-    * geometry needs a level above 0. */
-  def coverSpec(geoms: Dataset[SubGeom], cfg: SpatialConfig)
-      : (SpatialConfig, Seq[Int], Boolean) = {
-    val padded = padDf(geoms.toDF(), cfg)
-    val distMode = cfg.withinDist >= 0
-    val ext = greatest(col("maxX") - col("minX"), col("maxY") - col("minY"))
-    val r = padded.agg(avg(ext.cast("double")), max(ext.cast("long")),
-      max(col("nSubs"))).head()
-    val meanExt = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    val maxExt = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val bigMultis = !r.isNullAt(2) && r.getInt(2) > 63
+  /** A resolved join plan: `cfg` with the cell size set (the configured
+    * one, else adaptive from the mean padded extent), the ACTIVE native
+    * levels at that cell size, and the stats pass they came from. */
+  final case class Plan(cfg: SpatialConfig, levels: Seq[Int],
+      stats: InputStats)
+
+  /** Plan a join over the (typically cached) geometries from the ONE
+    * [[inputStats]] pass. Every planner — run(), the index writer, the
+    * public cover table, and the standalone candidates/fusedPairs calls —
+    * resolves cell size and levels here. */
+  def plan(geoms: Dataset[SubGeom], cfg: SpatialConfig): Plan = {
+    val st = inputStats(geoms, cfg)
     val cs = if (cfg.cellSize > 0) cfg.cellSize
-      else cellSizeFor(meanExt, distMode)
-    val lvls =
-      if (levelFor(maxExt, cs) == 0) Seq(0)
-      else padded.agg(collect_set(nlvlCol(cs))).head()
-        .getSeq[Int](0).sorted
-    (cfg.copy(cellSize = cs), lvls, bigMultis)
+      else cellSizeFor(st.meanExt, distMode = cfg.withinDist >= 0)
+    Plan(cfg.copy(cellSize = cs), st.levelsFor(cs), st)
   }
 
   /** Candidate sub-geometry pairs for the NON-fused path (<ref>
@@ -493,7 +333,7 @@ object SpatialJoin {
 
     val (cfg2, lvls) =
       if (activeLevels != null && cfg.cellSize > 0) (cfg, activeLevels)
-      else { val (c, l, _) = coverSpec(geoms, cfg); (c, l) }
+      else { val p = plan(geoms, cfg); (p.cfg, p.levels) }
     val (exploded, cs) = cellCover(geoms, cfg2, lvls)
 
     val bboxOverlap =
@@ -1488,8 +1328,6 @@ object SpatialJoin {
   @volatile var lastBboxPass: org.apache.spark.util.LongAccumulator = _
   @volatile var lastCellPass: org.apache.spark.util.LongAccumulator = _
   @volatile var lastIsectMiss: org.apache.spark.util.LongAccumulator = _
-  @volatile var lastKindNs: Array[org.apache.spark.util.LongAccumulator] = _
-  @volatile var lastKindN: Array[org.apache.spark.util.LongAccumulator] = _
   /** numReferences of the LAST run(): authored <ref> edges + P9 duplicate
     * rewrites (the count the reference's RunStats reports). */
   @volatile var lastNumReferences: Long = 0L
@@ -1581,7 +1419,7 @@ object SpatialJoin {
       "prePacked needs a resolved cellSize and activeLevels")
     val (cfg2, lvls) =
       if (activeLevels != null && cfg.cellSize > 0) (cfg, activeLevels)
-      else { val (c, l, _) = coverSpec(geoms, cfg); (c, l) }
+      else { val p = plan(geoms, cfg); (p.cfg, p.levels) }
     val distMode = cfg.mode == "distance"
     val de9imMode = cfg.mode == "de9im"
     val wd = cfg.withinDist
@@ -1591,28 +1429,16 @@ object SpatialJoin {
     val useBox = cfg.useBoxIds
     val useObb = cfg.useOrientedBox
     val useFss = cfg.useFastSweepSkip
-    // measurement-only knob (wrong results): skip the exact kernel to
-    // attribute stage cpu between pairing and refinement
-    val dbgSkipRelate =
-      sys.env.get("GRAFT_KERNEL_DEBUG").contains("skiprelate")
-    val dbgSkipState =
-      sys.env.get("GRAFT_KERNEL_DEBUG").contains("skipstate")
-    val dbgTimeKinds =
-      sys.env.get("GRAFT_KERNEL_DEBUG").contains("timekinds")
-    val dbgPairStats =
-      sys.env.get("GRAFT_KERNEL_DEBUG").exists(_.contains("pairstats")) ||
-        spark.conf.getOption("graft.kernel.pairstats").contains("true")
+    // bbox/cell/isect-miss counters cost an accumulator add per pair:
+    // counted only when the session asks (the CLI's --stats)
+    val pairStats =
+      spark.conf.getOption("graft.kernel.pairstats").contains("true")
     val accBboxPass = spark.sparkContext.longAccumulator("graft.bboxPass")
     val accCellPass = spark.sparkContext.longAccumulator("graft.cellPass")
     val accIsectMiss = spark.sparkContext.longAccumulator("graft.isectMiss")
     lastBboxPass = accBboxPass
     lastCellPass = accCellPass
     lastIsectMiss = accIsectMiss
-    val accKindNs = if (!dbgTimeKinds) null else Array.tabulate(9)(i =>
-      spark.sparkContext.longAccumulator(s"graft.relateNs.k${i / 3}${i % 3}"))
-    val accKindN = if (!dbgTimeKinds) null else Array.tabulate(9)(i =>
-      spark.sparkContext.longAccumulator(s"graft.relateN.k${i / 3}${i % 3}"))
-    lastKindNs = accKindNs; lastKindN = accKindN
     val w2 = WORLD_W / 2
     // direct mode (all-single-sub input, decided by run()'s stats pass):
     // every pair is complete after its one processPair (first-common-cell +
@@ -1637,31 +1463,11 @@ object SpatialJoin {
     // nlvl b3-7, subId b8-15, nSubs b16-23), the bbox into two longs, and
     // the geometry payload into one delta-varint binary (CoordCodec —
     // web-mercator coords are lz4-incompressible and were ~60% of the
-    // shuffle bytes). cellCoverPacked projects these BELOW the explode
-    // chain so each evaluates once per sub-geometry, not per cover row;
-    // the GRAFT_COVER=gen measurement alternate keeps the per-cover-row
-    // packing over the generator's output (identical rows either way).
-    val (src, cs) =
-      if (prePacked != null)
-        (coverFromPacked(prePacked, cfg2.cellSize, lvls), cfg2.cellSize)
-      else if (!sys.env.get("GRAFT_COVER").contains("gen"))
-        cellCoverPacked(geoms, cfg2, lvls)
-      else {
-        val (exploded, cs0) = cellCover(geoms, cfg2, lvls)
-        val encCol = org.apache.spark.sql.GraftInternal.colOf(EncodeGeom(
-          org.apache.spark.sql.GraftInternal.exprOf(col("coords")),
-          org.apache.spark.sql.GraftInternal.exprOf(col("ringEnds"))))
-        (exploded.select(col("cell"), col("gid"),
-          (col("side") + col("kind") * 2 + col("nlvl") * 8 +
-            col("subId") * 256 + col("nSubs") * 65536).cast("int").as("meta"),
-          encCol.as("enc"),
-          (shiftleft(col("minX").cast("long"), 32)
-            .bitwiseOR(col("minY").cast("long").bitwiseAND(lit(0xffffffffL))))
-            .as("bb0"),
-          (shiftleft(col("maxX").cast("long"), 32)
-            .bitwiseOR(col("maxY").cast("long").bitwiseAND(lit(0xffffffffL))))
-            .as("bb1")), cs0)
-      }
+    // shuffle bytes). packedRows projects these BELOW the cover's explode
+    // so each evaluates once per sub-geometry, not per cover row.
+    val cs = cfg2.cellSize
+    val src = coverFromPacked(
+      if (prePacked != null) prePacked else packedRows(geoms, cfg2), cs, lvls)
     // explicit partition count: with a bare repartition(col) AQE coalesces
     // the 67 MB cell shuffle to ~6 partitions, which packs badly onto the
     // executor cores and loses skew headroom — kernel cost per row is far
@@ -1684,16 +1490,6 @@ object SpatialJoin {
     val kernelParts =
       if (rowHint > 0) math.max(floorParts, (rowHint / 100000L).toInt)
       else floorParts
-    // the kernel needs cell GROUPING, not global cell order; the hash
-    // variant (spark conf graft.kernel.group=hash, or env
-    // GRAFT_KERNEL_GROUP) skips the Tungsten sort and re-groups rows in a
-    // per-partition LinkedHashMap (bounded by the partition's row payload,
-    // which the sorter buffers anyway). Interleaved A/B on the 1M-geom
-    // join: ~4% faster at 1 core and 32 cores, but occasionally slower at
-    // 4 cores (larger live buffer per concurrent task) — sort stays the
-    // default.
-    val hashGroup = spark.conf.getOption("graft.kernel.group")
-      .orElse(sys.env.get("GRAFT_KERNEL_GROUP")).contains("hash")
     val shuffled = src.repartition(kernelParts, col("cell"))
     // sort by cell ALONE: a single long sort column satisfies the whole
     // ordering from its 8-byte prefix, so Tungsten takes the RADIX path
@@ -1703,9 +1499,7 @@ object SpatialJoin {
     // per-cell sweep needs is restored inside the kernel by sorting the
     // DECODED GeomRefs of each cell (bounded by the task's row count,
     // which kernelParts scales with input size).
-    val sorted =
-      if (hashGroup) shuffled
-      else shuffled.sortWithinPartitions(col("cell"))
+    val sorted = shuffled.sortWithinPartitions(col("cell"))
     val accChecks = spark.sparkContext.longAccumulator("graft.exactChecks")
     val accDecided = spark.sparkContext.longAccumulator("graft.decided")
     val accPairTests = spark.sparkContext.longAccumulator("graft.pairTests")
@@ -1713,7 +1507,7 @@ object SpatialJoin {
     lastDecided = accDecided
     lastPairTests = accPairTests
 
-    val rdd = sorted.queryExecution.toRdd.mapPartitions { rows0 =>
+    val rdd = sorted.queryExecution.toRdd.mapPartitions { rows =>
       import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
       import org.apache.spark.unsafe.types.UTF8String
@@ -1724,28 +1518,6 @@ object SpatialJoin {
       val tcFss = org.apache.spark.TaskContext.get()
       if (tcFss != null) tcFss.addTaskCompletionListener[Unit](_ =>
         graft.geom.EdgeIndex.enabled = true)
-      // hash-group variant: drain the partition into per-cell buffers and
-      // replay cell-contiguously — the downstream pump only needs cells to
-      // arrive as contiguous blocks, in any cell order
-      val rows: Iterator[InternalRow] =
-        if (!hashGroup) rows0
-        else {
-          val m = new java.util.LinkedHashMap[java.lang.Long,
-            scala.collection.mutable.ArrayBuffer[InternalRow]]()
-          while (rows0.hasNext) {
-            val r = rows0.next()
-            var buf = m.get(r.getLong(0))
-            if (buf == null) {
-              buf = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
-              m.put(r.getLong(0), buf)
-            }
-            buf += r.copy()
-          }
-          import scala.jdk.CollectionConverters._
-          // any within-cell order is fine: the pump sorts each cell's
-          // decoded refs by minX before sweeping
-          m.values().iterator().asScala.flatMap(_.iterator)
-        }
       val proj = UnsafeProjection.create(stateSchema)
       val out = new SpecificInternalRow(stateSchema)
       val aggMap = new java.util.HashMap[PKey, AggState](1 << 12)
@@ -1837,12 +1609,12 @@ object SpatialJoin {
         // most expensive of these tests and runs only on survivors
         if (p.minX > q.maxX || q.minX > p.maxX ||
             p.minY > q.maxY || q.minY > p.maxY) return
-        if (dbgPairStats) accBboxPass.add(1)
+        if (pairStats) accBboxPass.add(1)
         // first-common-cell dedup: only the cell holding the min corner of
         // the bbox intersection reports the pair (symmetric in p/q)
         if (cellOf(math.max(p.minX, q.minX), math.max(p.minY, q.minY))
             != curCell) return
-        if (dbgPairStats) accCellPass.add(1)
+        if (pairStats) accCellPass.add(1)
         // 45-deg diag-box filter (predicates only: distance pads bboxes but
         // the diag extents are unpadded)
         if (!distMode && useDiag &&
@@ -1950,18 +1722,8 @@ object SpatialJoin {
             }
           }
           accChecks.add(1)
-          if (dbgSkipRelate) return
-          val r =
-            if (dbgTimeKinds) {
-              val t0 = System.nanoTime()
-              val rr = Relate.relate(a.g, b.g)
-              val k = a.kind * 3 + b.kind
-              accKindNs(k).add(System.nanoTime() - t0)
-              accKindN(k).add(1)
-              rr
-            } else Relate.relate(a.g, b.g)
-          if (dbgSkipState) return
-          if (dbgPairStats && !r.isect) accIsectMiss.add(1)
+          val r = Relate.relate(a.g, b.g)
+          if (pairStats && !r.isect) accIsectMiss.add(1)
           if (r.isect) {
             val s = stateOf(a.gid, b.gid)
             s.nA = a.nSubs; s.nB = b.nSubs
@@ -2044,8 +1806,7 @@ object SpatialJoin {
       // time in GC copying ~1.4 GB of surviving map entries, and single-sub
       // pairs complete within one cell anyway so partial duplication from
       // early drains is marginal
-      val drainCap =
-        sys.env.getOrElse("GRAFT_DRAIN_CAP", (1 << 16).toString).toInt
+      val drainCap = 1 << 16
       // per-cell buffer of decoded refs: sorted by minX at flush, then swept
       var cellArr = new Array[GeomRef](64)
       var cellN = 0
@@ -2206,13 +1967,12 @@ object SpatialJoin {
     // ~100-byte entry per DISTINCT multi-sub pair of the partition (never
     // the single-sub majority, and kernel partitions scale with input size
     // via rowHint). For inputs whose pairs are overwhelmingly
-    // multi×multi-geometry, `graft.merge=sort` (conf or GRAFT_MERGE env)
+    // multi×multi-geometry, the `graft.merge=sort` session conf
     // selects a sort-based merge instead: Tungsten sorts the partials by
     // pair key (spilling gracefully at any size) and the merge keeps O(1)
     // group state. Same output, verified by EngineOpsSpec.
     val selfJoin = cfg.selfJoin
-    val sortMerge = spark.conf.getOption("graft.merge")
-      .orElse(sys.env.get("GRAFT_MERGE")).contains("sort")
+    val sortMerge = spark.conf.getOption("graft.merge").contains("sort")
     val parted0 = pre.repartition(col("gidA"), col("gidB"))
     val parted =
       if (sortMerge) parted0.sortWithinPartitions(col("gidA"), col("gidB"))
@@ -2391,25 +2151,20 @@ object SpatialJoin {
       }
     }
     spark.sparkContext.setCallSite("graft.stats")
-    val st = inputStats(g0, cfg)
+    val pl = plan(g0, cfg)
     spark.sparkContext.clearCallSite()
-    val meanExt = st.meanExt
-    val maxExt = st.maxExt
+    val st = pl.stats
     val bigMultis = st.bigMultis
     val maxCoordLen = st.maxCoordLen
+    val nRows = st.nRows
     // "if sides are defined, only geometries from different sides are
     // compared" (reference README.md:118): sides in the input activate the
     // non-self discipline regardless of the configured default
-    val hasSides = st.hasSides
-    val nRows = st.nRows
-    val cs = if (cfg.cellSize > 0) cfg.cellSize
-      else cellSizeFor(meanExt, distMode = cfg.withinDist >= 0)
-    val cfgCs = cfg.copy(cellSize = cs,
-      selfJoin = cfg.selfJoin && !hasSides)
+    val cfgCs = pl.cfg.copy(selfJoin = cfg.selfJoin && !st.hasSides)
     // active levels from the single stats pass (see inputStats).
     // P9 removes only exact copies, whose extents equal their keeper's, so
     // the pre-dedup extrema yield the identical level set.
-    val lvls = st.levelsFor(cs)
+    val lvls = pl.levels
 
     // duplicate -> reference rewrite (P9); the edge set is collected to the
     // driver and joined into the authored-alias closure. BOUND: duplicate
@@ -2452,7 +2207,6 @@ object SpatialJoin {
     // pass): every existing target joins its single sub row and the slot
     // renumbering reproduces the parse numbering, while dangling targets
     // keep their parsed edge either way.
-    val allSingleSubs = st.allSingle
     val refsHead = scala.concurrent.Await.result(refsHeadFut,
       scala.concurrent.duration.Duration.Inf)
     val overCap = refsHead.length >= edgeCap
@@ -2464,7 +2218,7 @@ object SpatialJoin {
     val authoredEdges: Array[RefEdge] =
       if (refsHead.isEmpty) Array.empty[RefEdge]
       else if (overCap) refsHead // sentinel: length >= edgeCap reroutes below
-      else if (allSingleSubs) refsHead
+      else if (st.allSingle) refsHead
       else {
         // target -> real sub ids, via one bounded semi-join collect
         val tgtDf = spark.createDataset(
@@ -2541,8 +2295,7 @@ object SpatialJoin {
       // proves the input is entirely single-sub, every pair completes
       // inside the kernel (one processPair globally per pair), so the
       // kernel emits FINAL relation rows and no merge shuffle exists
-      val allSingle = st.allSingle
-      return if (allSingle)
+      return if (st.allSingle)
         fusedPairs(spark, g, cfgCs, lvls, direct = true, rowHint = nRows)
       else aggregateFromPre(spark,
         fusedPairs(spark, g, cfgCs, lvls, rowHint = nRows), cfgCs)

@@ -147,8 +147,8 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       rowSet(df.selectExpr("a_id", "cast(predicate as string)", "b_id"))
     val geoms = SynthGeo.dataset(s, 20000L, 7L).cache()
     try {
-      val (cfg, lvls, _) =
-        SpatialJoin.coverSpec(geoms, SpatialConfig(dupMinPoints = -1))
+      val p = SpatialJoin.plan(geoms, SpatialConfig(dupMinPoints = -1))
+      val (cfg, lvls) = (p.cfg, p.levels)
       val fused = rels(SpatialJoin.aggregateFromPre(s,
         SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg))
       val general = rels(SpatialJoin.aggregate(s,

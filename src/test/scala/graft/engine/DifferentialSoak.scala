@@ -73,7 +73,8 @@ object DifferentialSoak {
         if (cfg0.selfJoin) base
         else base.map(g => g.copy(side = math.abs(g.gid.hashCode) % 2))
       ).cache()
-      val (cfg, lvls, _) = SpatialJoin.coverSpec(geoms, cfg0)
+      val p = SpatialJoin.plan(geoms, cfg0)
+      val (cfg, lvls) = (p.cfg, p.levels)
       val mode = cfg.mode
       val fused = rels(SpatialJoin.aggregateFromPre(spark,
         SpatialJoin.fusedPairs(spark, geoms, cfg, lvls), cfg), mode)

@@ -615,7 +615,8 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           dupMinPoints = -1),
         SpatialConfig(mode = "de9im", dupMinPoints = -1))) {
       val geoms = SynthGeo.dataset(s, 4000).cache()
-      val (cfg, lvls, _) = SpatialJoin.coverSpec(geoms, cfg0)
+      val p = SpatialJoin.plan(geoms, cfg0)
+      val (cfg, lvls) = (p.cfg, p.levels)
       val fused = rels(SpatialJoin.aggregateFromPre(s,
         SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg)
         .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
@@ -626,14 +627,6 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fused == general,
         s"mode=${cfg0.mode} fusedOnly=${(fused -- general).take(5)} " +
           s"generalOnly=${(general -- fused).take(5)}")
-      // the hash-grouped kernel variant must agree bit-for-bit too
-      s.conf.set("graft.kernel.group", "hash")
-      val hashed = try rels(SpatialJoin.aggregateFromPre(s,
-        SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg)
-        .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
-      finally s.conf.unset("graft.kernel.group")
-      assert(hashed == general, s"mode=${cfg0.mode} hash-group variant " +
-        s"diverges: ${(hashed -- general).take(5)}")
       assert(fused.nonEmpty)
       geoms.unpersist()
     }
@@ -652,7 +645,7 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rels(cs: Long): Seq[(String, String, String)] =
       SpatialJoin.run(s, geoms, refs, SpatialConfig(cellSize = cs))
         .as[(String, String, String)].collect().sorted.toSeq
-    val (cfgR, _, _) = SpatialJoin.coverSpec(geoms, SpatialConfig())
+    val cfgR = SpatialJoin.plan(geoms, SpatialConfig()).cfg
     val base = rels(cfgR.cellSize)
     assert(base.nonEmpty)
     for (cs <- Seq(math.max(cfgR.cellSize / 8, 16L), cfgR.cellSize * 64))
@@ -679,8 +672,8 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.Encoders.STRING)
       val (geoms0, _) = Model.parseLines(s, strDs)
       val geoms = geoms0.cache()
-      val (cfg, lvls, _) = SpatialJoin.coverSpec(geoms,
-        SpatialConfig(dupMinPoints = -1))
+      val p = SpatialJoin.plan(geoms, SpatialConfig(dupMinPoints = -1))
+      val (cfg, lvls) = (p.cfg, p.levels)
       val hashM = rels(SpatialJoin.aggregateFromPre(s,
         SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg))
       s.conf.set("graft.merge", "sort")
@@ -715,53 +708,67 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("cellCover generator matches an independent enumeration") {
-    // the cover feeds BOTH join paths; this pins the generator (pad, nlvl,
-    // level filter, cell-range loops, key packing) against a plain-Scala
-    // re-derivation from the documented semantics, on real fixture
-    // geometries, in predicates AND distance mode
-    val s = spark
-    import s.implicits._
-    import graft.geom.{Dist, Geo}
+  /** freiburg fixture geometries (real OSM shapes of every kind). */
+  private def freiburgGeoms(): org.apache.spark.sql.Dataset[SubGeom] = {
     val lines = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/datasets/freiburg"), "UTF-8")
       .getLines().toList
-    val ds = spark.createDataset(lines)
-    val (geoms, _) = Model.parseLines(spark, ds)
-    for (cfg0 <- Seq(SpatialConfig(), SpatialConfig(mode = "distance",
-        withinDist = 5000))) {
-      val (cfg, lvls, _) = SpatialJoin.coverSpec(geoms, cfg0)
-      val (df, cs) = SpatialJoin.cellCover(geoms, cfg, lvls)
+    Model.parseLines(spark,
+      spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))._1
+  }
+
+  /** Plain-Scala re-derivation of the multi-level cover from its documented
+    * semantics (pad, native level, active levels >= native, floor cell
+    * ranges, key packing): (gid, subId, nlvl, lvl, cell, padded bbox). */
+  private def expectedCover(geoms: Array[SubGeom], cfg: SpatialConfig,
+      lvls: Seq[Int]): Seq[(String, Int, Int, Int, Long, Int, Int, Int, Int)] = {
+    import graft.geom.Dist
+    val cs = cfg.cellSize
+    val w2 = Geo.WORLD_W / 2
+    geoms.flatMap { sg =>
+      var (minX, minY, maxX, maxY) = (sg.minX, sg.minY, sg.maxX, sg.maxY)
+      if (cfg.withinDist >= 0) {
+        val f = math.max(1.0 / Dist.distFactor(minY / Geo.PREC),
+          1.0 / Dist.distFactor(maxY / Geo.PREC))
+        val pad = math.ceil((cfg.withinDist / 2.0) * f * Geo.PREC).toInt
+        minX -= pad; minY -= pad; maxX += pad; maxY += pad
+      }
+      val w = math.max(maxX - minX, maxY - minY).toLong
+      val nlvl = SpatialJoin.levelFor(w, cs)
+      for {
+        lvl <- lvls if lvl >= nlvl
+        csL = (cs << (SpatialJoin.LEVEL_FACTOR_BITS * lvl)).toDouble
+        cx <- math.floor((minX + w2) / csL).toLong to
+          math.floor((maxX + w2) / csL).toLong
+        cy <- math.floor((minY + w2) / csL).toLong to
+          math.floor((maxY + w2) / csL).toLong
+      } yield (sg.gid, sg.subId, nlvl, lvl,
+        (lvl.toLong << SpatialJoin.CELL_LVL_SHIFT) +
+          (cx + SpatialJoin.CELL_BIAS) * (1L << SpatialJoin.CELL_XY_BITS) +
+          (cy + SpatialJoin.CELL_BIAS),
+        minX, minY, maxX, maxY)
+    }.toSeq
+  }
+
+  private val coverModes = Seq(SpatialConfig(),
+    SpatialConfig(mode = "distance", withinDist = 5000))
+
+  test("cellCover generator matches an independent enumeration") {
+    // the cover feeds the general join path; this pins it (pad, nlvl,
+    // level filter, cell ranges, key packing, lvl read back from the key)
+    // against the plain-Scala re-derivation, on real fixture geometries,
+    // in predicates AND distance mode
+    val geoms = freiburgGeoms()
+    for (cfg0 <- coverModes) {
+      val p = SpatialJoin.plan(geoms, cfg0)
+      val (df, _) = SpatialJoin.cellCover(geoms, p.cfg, p.levels)
       val got = df.select("gid", "subId", "nlvl", "lvl", "cell",
           "minX", "minY", "maxX", "maxY")
         .collect()
         .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3),
           r.getLong(4), r.getInt(5), r.getInt(6), r.getInt(7), r.getInt(8)))
         .toSet
-      val w2 = Geo.WORLD_W / 2
-      val expected = geoms.collect().flatMap { sg =>
-        var (minX, minY, maxX, maxY) = (sg.minX, sg.minY, sg.maxX, sg.maxY)
-        if (cfg.withinDist >= 0) {
-          val f = math.max(1.0 / Dist.distFactor(minY / Geo.PREC),
-            1.0 / Dist.distFactor(maxY / Geo.PREC))
-          val pad = math.ceil((cfg.withinDist / 2.0) * f * Geo.PREC).toInt
-          minX -= pad; minY -= pad; maxX += pad; maxY += pad
-        }
-        val w = math.max(maxX - minX, maxY - minY).toLong
-        val nlvl = SpatialJoin.levelFor(w, cs)
-        for {
-          lvl <- lvls if lvl >= nlvl
-          csL = (cs << (SpatialJoin.LEVEL_FACTOR_BITS * lvl)).toDouble
-          cx <- math.floor((minX + w2) / csL).toLong to
-            math.floor((maxX + w2) / csL).toLong
-          cy <- math.floor((minY + w2) / csL).toLong to
-            math.floor((maxY + w2) / csL).toLong
-        } yield (sg.gid, sg.subId, nlvl, lvl,
-          (lvl.toLong << SpatialJoin.CELL_LVL_SHIFT) +
-            (cx + SpatialJoin.CELL_BIAS) * (1L << SpatialJoin.CELL_XY_BITS) +
-            (cy + SpatialJoin.CELL_BIAS),
-          minX, minY, maxX, maxY)
-      }.toSet
+      val expected = expectedCover(geoms.collect(), p.cfg, p.levels).toSet
       assert(got == expected,
         s"cfg=$cfg0 missing=${(expected -- got).take(3)} " +
           s"spurious=${(got -- expected).take(3)}")
@@ -769,33 +776,56 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("packed cover (CellListExpr) matches the SQL cover chain") {
-    // cellCoverPacked feeds the fused kernel's shuffle; this pins its
-    // single-expression cell enumeration (CellEnum.cells + one explode)
-    // to the reference cellCoverSql chain, per (gid, cell) multiset, on
-    // real fixture geometries in predicates AND distance mode
-    val s = spark
-    import s.implicits._
-    val lines = scala.io.Source.fromInputStream(
-      getClass.getResourceAsStream("/datasets/freiburg"), "UTF-8")
-      .getLines().toList
-    val ds = spark.createDataset(lines)
-    val (geoms, _) = Model.parseLines(spark, ds)
-    for (cfg0 <- Seq(SpatialConfig(), SpatialConfig(mode = "distance",
-        withinDist = 5000))) {
-      val (cfg, lvls, _) = SpatialJoin.coverSpec(geoms, cfg0)
-      val (packedDf, _) = SpatialJoin.cellCoverPacked(geoms, cfg, lvls)
-      val (sqlDf, _) = SpatialJoin.cellCover(geoms, cfg, lvls)
-      def multiset(rows: Array[(String, Long)]) =
-        rows.groupBy(identity).map { case (k, v) => (k, v.length) }
-      val got = multiset(packedDf.select("gid", "cell")
-        .collect().map(r => (r.getString(0), r.getLong(1))))
-      val want = multiset(sqlDf.select("gid", "cell")
-        .collect().map(r => (r.getString(0), r.getLong(1))))
+  test("packed cover (CellListExpr) matches an independent enumeration") {
+    // the packed cover feeds the fused kernel's shuffle; this pins its
+    // (cell, gid) rows and the native level packed into meta against the
+    // same plain-Scala re-derivation, per (gid, cell) multiset, on real
+    // fixture geometries in predicates AND distance mode
+    val geoms = freiburgGeoms()
+    def multiset[K](rows: Iterable[K]) =
+      rows.groupBy(identity).map { case (k, v) => (k, v.size) }
+    for (cfg0 <- coverModes) {
+      val p = SpatialJoin.plan(geoms, cfg0)
+      val packedDf = SpatialJoin.coverFromPacked(
+        SpatialJoin.packedRows(geoms, p.cfg), p.cfg.cellSize, p.levels)
+      val got = multiset(packedDf.select("gid", "cell", "meta").collect()
+        .map(r => (r.getString(0), r.getLong(1), (r.getInt(2) >> 3) & 31))
+        .toSeq)
+      val want = multiset(expectedCover(geoms.collect(), p.cfg, p.levels)
+        .map(e => (e._1, e._5, e._3)))
       assert(got == want, s"cfg=$cfg0 " +
         s"missing=${(want.keySet -- got.keySet).take(3)} " +
         s"spurious=${(got.keySet -- want.keySet).take(3)}")
       assert(got.nonEmpty)
+    }
+  }
+
+  test("plan levels == the distinct native levels of the cover at any cell size") {
+    // plan() derives the active levels from the stats pass's log2 extent
+    // buckets; the cover computes each row's native level directly
+    // (nlvlCol). Every geometry must appear in the cover, and the cover's
+    // distinct nlvls must be exactly the planned levels — at the adaptive
+    // cell size and at /8 and x64 of it (several levels active)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("gid", "side", "subId").distinct().count()
+    for ((name, mk) <- Seq[(String, () => org.apache.spark.sql.Dataset[SubGeom])](
+        "SynthGeo" -> (() => SynthGeo.dataset(spark, 15000)),
+        "freiburg" -> (() => freiburgGeoms()))) {
+      val geoms = mk().cache()
+      for (cfg0 <- coverModes) {
+        val adaptive = SpatialJoin.plan(geoms, cfg0).cfg.cellSize
+        for (cs <- Seq(adaptive, math.max(adaptive / 8, 16L), adaptive * 64)) {
+          val p = SpatialJoin.plan(geoms, cfg0.copy(cellSize = cs))
+          assert(p.cfg.cellSize == cs)
+          val (cover, _) = SpatialJoin.cellCover(geoms, p.cfg, p.levels)
+          val nlvls = cover.select("nlvl").distinct().collect()
+            .map(_.getInt(0)).toSeq.sorted
+          assert(nlvls == p.levels, s"$name ${cfg0.mode} cs=$cs")
+          assert(keys(cover) == keys(geoms.toDF()),
+            s"$name ${cfg0.mode} cs=$cs: a geometry has no cell")
+        }
+      }
+      geoms.unpersist()
     }
   }
 
