@@ -162,14 +162,8 @@ object SpatialIndex {
     val cfgCs = cfg.copy(cellSize = meta.cellSize,
       selfJoin = cfg.selfJoin && !meta.hasSides)
     val packed = spark.read.parquet(s"$path/packed")
-    val lvls = meta.levels.map(_.toInt)
-    if (meta.allSingle)
-      SpatialJoin.fusedPairs(spark, null, cfgCs, lvls, direct = true,
-        rowHint = meta.nRows, prePacked = packed)
-    else
-      SpatialJoin.aggregateFromPre(spark,
-        SpatialJoin.fusedPairs(spark, null, cfgCs, lvls,
-          rowHint = meta.nRows, prePacked = packed), cfgCs)
+    SpatialJoin.fusedRelations(spark, null, cfgCs,
+      meta.levels.map(_.toInt), meta.allSingle, meta.nRows, packed)
   }
 
   /** Join a probe set against the indexed side (probe rows become side 1,
@@ -205,13 +199,8 @@ object SpatialIndex {
       val nProbe = if (pst.isNullAt(2)) 0L else pst.getLong(2)
       val lvls = (meta.levels.map(_.toInt) ++ probeLvls).distinct.sorted
       val packed = packedIdx.unionByName(packedProbe)
-      if (meta.allSingle && probeAllSingle)
-        SpatialJoin.fusedPairs(spark, null, cfgCs, lvls, direct = true,
-          rowHint = meta.nRows + nProbe, prePacked = packed)
-      else
-        SpatialJoin.aggregateFromPre(spark,
-          SpatialJoin.fusedPairs(spark, null, cfgCs, lvls,
-            rowHint = meta.nRows + nProbe, prePacked = packed), cfgCs)
+      SpatialJoin.fusedRelations(spark, null, cfgCs, lvls,
+        meta.allSingle && probeAllSingle, meta.nRows + nProbe, packed)
     } finally packedProbe.unpersist(blocking = false)
   }
 

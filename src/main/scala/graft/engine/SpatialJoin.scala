@@ -570,10 +570,6 @@ object SpatialJoin {
       }
   }
 
-  /** Fan staged rows out through <ref> aliases, both sides, transitively
-    * (reference: recursion inside every write*, e.g. Sweeper.cpp:2423-2450).
-    * Also seeds self-relation rows for referenced geometries (selfCheck,
-    * Sweeper.cpp:2453-2475). */
   /** Authored `<refs>` edges are parsed one per TARGET id with the
     * target's sub structure unknown (`targetSub` 0, slots = author
     * order). That never joins a MULTI-part target's relations: its real
@@ -653,9 +649,18 @@ object SpatialJoin {
     }.toArray
   }
 
+  /** Fan staged rows out through <ref> aliases, both sides, transitively
+    * (reference: recursion inside every write*, e.g. Sweeper.cpp:2423-2450).
+    * Also seeds self-relation rows for referenced geometries (selfCheck,
+    * Sweeper.cpp:2453-2475). `geoms` minus the `dropped` (gid, side,
+    * subId) keys is the join input the self rows describe: run() passes
+    * the cached input and the P9 duplicate keys, so the self rows come
+    * from one bounded collect instead of a join against the data-sized
+    * geometry table. */
   def fanout(spark: SparkSession, flags: DataFrame,
       edges: Array[RefEdge], geoms: Dataset[SubGeom],
-      cfg: SpatialConfig): DataFrame = {
+      cfg: SpatialConfig, dropped: Set[(String, Int, Int)] = Set.empty)
+      : DataFrame = {
     import spark.implicits._
     // The alias table is tiny relative to the data (it is authored id
     // lists, collected ONCE by run); its transitive closure is computed on
@@ -690,9 +695,27 @@ object SpatialJoin {
     edges.map(e => (e.target, e.targetSub)).distinct
       .foreach(t => referersOf(t, Set(t)))
 
-    val tgtDf = spark.createDataset(
-      edges.map(e => (e.target, e.targetSub)).distinct.toSeq)
-      .toDF("t", "ts")
+    // self-row inputs: every referenced (target, targetSub) with its
+    // geometry rows' (kind, nSubs, side), or nulls for a dangling target
+    // (left-join semantics), from one broadcast semi-join collect bounded
+    // by the targets' sub rows
+    val tgtIds = spark.createDataset(edges.map(_.target).distinct.toSeq)
+      .toDF("t_gid")
+    val tgtRows = geoms.toDF()
+      .join(broadcast(tgtIds), col("gid") === col("t_gid"), "left_semi")
+      .select(col("gid"), col("subId"), col("kind"), col("nSubs"),
+        col("side"))
+      .as[(String, Int, Int, Int, Int)].collect()
+      .filterNot(r => dropped((r._1, r._5, r._2)))
+      .groupBy(r => (r._1, r._2))
+    val selfInfo = edges.map(e => (e.target, e.targetSub)).distinct.toSeq
+      .flatMap { t =>
+        tgtRows.get(t) match {
+          case Some(rs) => rs.toSeq.map(r =>
+            (t._1, t._2, Option(r._3), Option(r._4), Option(r._5)))
+          case None => Seq((t._1, t._2, None, None, None))
+        }
+      }.toDF("t", "ts", "kind", "nSubs", "side")
     // options arrays grouped on the DRIVER (the closure map is already
     // here): skips the collect_list shuffle+aggregate the grouped-frame
     // path would pay per query
@@ -700,7 +723,7 @@ object SpatialJoin {
       closure.toSeq.map { case ((t, ts), rs) =>
         FanClos(t, ts, rs.map(r => FanOpt(r.referer, r.subId, r.nSubs, r.side)))
       }))
-    fanoutWith(spark, flags, closArr, tgtDf, geoms, cfg)
+    fanoutWith(flags, closArr, selfInfo, cfg)
   }
 
   /** Distributed fanout for edge sets past cfg.maxDriverEdges: the
@@ -747,10 +770,17 @@ object SpatialJoin {
     // materialize the (small, closure-sized) join inputs eagerly so `e` —
     // the million-row distinct this path exists to avoid recomputing — can
     // be released NOW instead of staying pinned until the caller's action
-    // (fanoutWith's plan reads closDf/tgtDf three times; without the
-    // checkpoint each read would re-run the distinct after the unpersist)
-    val tgtDf = e.select(col("target").as("t"), col("targetSub").as("ts"))
-      .distinct().localCheckpoint()
+    // (fanoutWith's plan reads closArr twice; without the checkpoint each
+    // read would re-run the distinct after the unpersist). The self-row
+    // inputs join the targets against the geometry table here: past the
+    // driver cap they are not collected.
+    val selfInfo = e.select(col("target").as("t"), col("targetSub").as("ts"))
+      .distinct()
+      .join(geoms.toDF().select(col("gid"), col("subId"), col("kind"),
+        col("nSubs"), col("side")),
+        col("t") === col("gid") && col("ts") === col("subId"), "left")
+      .select(col("t"), col("ts"), col("kind"), col("nSubs"), col("side"))
+      .localCheckpoint()
     val closArr = clos.groupBy(col("target"), col("targetSub"))
       .agg(collect_list(struct(col("referer").as("g"),
         col("subId").cast("int").as("sub"), col("nSubs").cast("int").as("n"),
@@ -758,7 +788,7 @@ object SpatialJoin {
       .select(col("target").as("c_target"), col("targetSub").as("c_tsub"),
         col("_graft_opts"))
       .localCheckpoint()
-    val out = fanoutWith(spark, flags, closArr, tgtDf, geoms, cfg)
+    val out = fanoutWith(flags, closArr, selfInfo, cfg)
     e.unpersist(false)
     out
   }
@@ -771,11 +801,11 @@ object SpatialJoin {
 
   /** Shared fanout tail: expand staged rows through a GROUPED closure
     * table (c_target, c_tsub, _graft_opts: array<struct<g,sub,n,side>>)
-    * and seed self-relation rows for the referenced targets (t, ts). */
-  private def fanoutWith(spark: SparkSession, flags: DataFrame,
-      closArr: DataFrame, tgtDf: DataFrame, geoms: Dataset[SubGeom],
-      cfg: SpatialConfig): DataFrame = {
-    import spark.implicits._
+    * and seed self-relation rows for the referenced targets `selfInfo`
+    * (t, ts, kind, nSubs, side; null kind/nSubs/side for a target with no
+    * geometry row). */
+  private def fanoutWith(flags: DataFrame, closArr: DataFrame,
+      selfInfo: DataFrame, cfg: SpatialConfig): DataFrame = {
     // self rows: (target, target) intersect/equal/cover/contain per
     // referenced (geometry, sub); only meaningful once fanned to a referer
     // (reference selfCheck, Sweeper.cpp:2453-2475). Carries the target's
@@ -788,10 +818,7 @@ object SpatialJoin {
     val k = coalesce(col("kind"), lit(-1))
     val n = coalesce(col("nSubs"), lit(1))
     val sCol = coalesce(col("side"), lit(0))
-    val selfRows = tgtDf
-      .join(geoms.toDF().select(col("gid"), col("subId"), col("kind"),
-        col("nSubs"), col("side")),
-        col("t") === col("gid") && col("ts") === col("subId"), "left")
+    val selfRows = selfInfo
       .select(col("t").as("gidA"), col("ts").as("subA"),
         n.as("nA"), k.as("kindA"),
         col("t").as("gidB"), col("ts").as("subB"),
@@ -881,232 +908,91 @@ object SpatialJoin {
     }
   }
 
-  /** Aggregate sub-pair flags into relations per (gidA, gidB), reproducing
-    * the reference's multiOut semantics (Sweeper.cpp:788-1059). Output:
-    * (a_id, predicate, b_id) in predicates mode; (a_id, matrix, b_id) in
-    * de9im mode; (a_id, dist, b_id) in distance mode. */
-  /** @param mayHaveBigMultis whether any geometry has more than 63 parts
-    *   (sub ids that overflow the 64-bit distinct-count masks). run()
-    *   derives it from max(nSubs); when false — every real dataset — the
-    *   typed-Aggregator fallback branch is not planned at all, so the
-    *   refine lineage executes exactly once and nothing needs caching. */
+  /** Aggregate sub-pair flag rows into relations per (gidA, gidB),
+    * reproducing the reference's multiOut semantics
+    * (Sweeper.cpp:788-1059). Each flag row is projected into the fused
+    * kernel's partial-row format — the same fields processPair writes —
+    * and [[aggregateFromPre]], the one merge of both paths, folds them.
+    * Output: (a_id, predicate, b_id) in predicates mode; (a_id, matrix,
+    * b_id) in de9im mode; (a_id, dist, b_id) in distance mode.
+    *
+    * @param mayHaveBigMultis whether any geometry has more than 63 parts
+    *   (sub ids that overflow the 64-bit sub masks). run() derives it from
+    *   max(nSubs). Only then, in predicates mode, are the pairs with such
+    *   a side folded by the typed [[RelAgg]] instead; each verdict enters
+    *   the merge as one partial row. */
   def aggregate(spark: SparkSession, flags: DataFrame,
-      cfg: SpatialConfig, hadRefs: Boolean = true,
-      mayHaveBigMultis: Boolean = false): DataFrame = {
+      cfg: SpatialConfig, mayHaveBigMultis: Boolean = false): DataFrame = {
     import spark.implicits._
     val pairFlags = flags.filter(col("gidA") =!= col("gidB"))
+    def bit(c: Column, i: Int): Column =
+      when(c, lit(1L << i)).otherwise(lit(0L))
+    def subBit(flag: String, sub: String): Column =
+      expr(s"IF($flag, shiftleft(1L, $sub), 0L)")
+    // per flag row: the packed flags/sub/n word and the six sub masks of
+    // aggRowSchema (sub ids < 64 here)
+    def partials(in: DataFrame): DataFrame = in.select(col("gidA"),
+      col("gidB"),
+      Seq(bit(col("isect"), 0), bit(col("touch"), 1),
+        bit(col("notTouch"), 2), bit(col("llCross"), 3),
+        bit(col("laCrossAB"), 4), bit(col("laCrossBA"), 5),
+        bit(col("overlap"), 6),
+        bit(col("covAbyB") || col("covBbyA") || col("overlap"), 7),
+        shiftleft(col("subA").cast("long"), 8),
+        shiftleft(col("subB").cast("long"), 16),
+        shiftleft(col("nA").cast("long"), 24),
+        shiftleft(col("nB").cast("long"), 32)).reduce(_ bitwiseOR _)
+        .as("packed"),
+      subBit("covAbyB", "subA").as("covAM"),
+      subBit("covBbyA", "subB").as("covBM"),
+      subBit("contAinB", "subA").as("contAM"),
+      subBit("contBinA", "subB").as("contBM"),
+      subBit("subEq", "subA").as("eqAM"),
+      subBit("subEq", "subB").as("eqBM"))
 
-    // Both-direction emission is an EXPLODE over the one aggregated row,
-    // not a self-union: `fwd.union(agg.select(reversed))` planned the
-    // aggregate's whole input lineage once per branch, so the exact
-    // refinement + fanout were recomputed twice per query (guide §2.4 /
-    // §7.2 — two identical `Scan ExistingRDD` subtrees in the r5 plan).
-    //
-    // No final distinct() in any branch (r6; it was a full exchange +
-    // aggregation over the OUTPUT, the largest table of the job at scale):
-    // every output row is a function of exactly one (gidA, gidB) group —
-    // fanoutWith canonicalizes fanned fragments to gidA <= gidB in self
-    // mode (and the side discipline fixes orientation otherwise), the
-    // groupBy leaves one row per group, and each group's forward/reverse
-    // emissions differ in their (a_id, b_id) orientation — so the
-    // relation rows are duplicate-free by construction. Pinned by the
-    // full-suite fixture assertions and the exact-row-count hash oracles
-    // (a duplicate would inflate sp_rect_refs/rdist/mdist counts).
-    if (cfg.mode == "distance") {
-      val agg = pairFlags.groupBy(col("gidA"), col("gidB"))
-        .agg(min(col("dist")).as("dist"))
-      val rels =
-        if (cfg.selfJoin)
-          agg.select(explode(array(
-              struct(col("gidA").as("a_id"), col("dist"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"), col("dist"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.dist"), col("r.b_id"))
-        else agg.select(col("gidA").as("a_id"), col("dist"),
-          col("gidB").as("b_id"))
-      return rels
-    }
-
-    if (cfg.mode == "de9im") {
-      val merged = pairFlags
-        .filter(length(col("de9im")) === 9 || col("dist") === 0.0)
-        .as[FlagRow]
-        .groupByKey(f => (f.gidA, f.gidB))
-        .mapGroups { (key: (String, String), it: Iterator[FlagRow]) =>
-          val (ga, gb) = key
-          var m: Relate.Mat = null
-          var kindB = -2
-          it.foreach { f =>
-            val mat =
-              if (f.de9im.length == 9)
-                f.de9im.map { case 'F' => -1; case c => c - '0' }.toArray
-              else selfMat(f.kindB)
-            m = if (m == null) mat else Relate.merge(m, mat)
-            kindB = f.kindB
-          }
-          (ga, Relate.matToString(m), gb, Relate.matToString(Relate.transpose(m)))
-        }
-        .toDF("gidA", "mat", "gidB", "matT")
-      val rels =
-        if (cfg.selfJoin)
-          merged.select(explode(array(
-              struct(col("gidA").as("a_id"), col("mat").as("de9im"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"), col("matT").as("de9im"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.de9im"), col("r.b_id"))
-        else merged.select(col("gidA").as("a_id"), col("mat").as("de9im"),
-          col("gidB").as("b_id"))
-      return rels
-    }
-
-    // ---------------------------------------------------------- predicates
-    // Persist only when the slow branch can exist (sub ids >= 64): it reads
-    // the flags a second time. DataFrame.persist copies field values into
-    // column batches, so the reused UnsafeRow from refine is safe to cache.
-    val flagsP =
-      if (mayHaveBigMultis)
-        pairFlags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pairFlags
-    // One-pass codegen aggregation: distinct-sub counting via 64-bit
-    // bit_or masks (sub ids < 64 cover all but pathological multis; those
-    // few pairs take a typed-Aggregator fallback). This stays inside
-    // whole-stage codegen — multi-countDistinct would EXPAND every row 7x,
-    // and a typed Aggregator drops the stage out of codegen entirely.
-    def any(c: Column): Column = max(c.cast("int")) === 1
-
-    val agg1 = flagsP.groupBy(col("gidA"), col("gidB")).agg(
-      max(col("nA")).as("nA"), max(col("nB")).as("nB"),
-      max(col("subA")).as("maxSubA"), max(col("subB")).as("maxSubB"),
-      any(col("isect")).as("isect"),
-      any(col("touch")).as("anyTouch"),
-      any(col("notTouch")).as("anyNotTouch"),
-      any(col("llCross")).as("anyLLCross"),
-      any(col("laCrossAB")).as("anyLAab"),
-      any(col("laCrossBA")).as("anyLAba"),
-      any(col("overlap")).as("anyOverlap"),
-      any(col("covAbyB") || col("covBbyA") || col("overlap"))
-        .as("anyNotCross"),
-      expr("bit_or(IF(covAbyB, shiftleft(1L, subA), 0L))").as("covAM"),
-      expr("bit_or(IF(covBbyA, shiftleft(1L, subB), 0L))").as("covBM"),
-      expr("bit_or(IF(contAinB, shiftleft(1L, subA), 0L))").as("contAM"),
-      expr("bit_or(IF(contBinA, shiftleft(1L, subB), 0L))").as("contBM"),
-      expr("bit_or(IF(subEq, shiftleft(1L, subA), 0L))").as("eqAM"),
-      expr("bit_or(IF(subEq, shiftleft(1L, subB), 0L))").as("eqBM"))
-
-    val fastOk = col("maxSubA") < 64 && col("maxSubB") < 64
-
-    val marked =
-      if (!mayHaveBigMultis) fastVerdicts(agg1)
-      else {
-        val fast = fastVerdicts(agg1.filter(fastOk))
-        // pathological multis (sub ids >= 64): exact typed aggregation over
-        // the persisted flags
-        val badKeys = agg1.filter(!fastOk).select(col("gidA").as("bk_a"),
-          col("gidB").as("bk_b"))
-        val slow = flagsP
-          .join(broadcast(badKeys), col("gidA") === col("bk_a") &&
-            col("gidB") === col("bk_b"), "left_semi")
-          .as[FlagRow]
+    val pre = cfg.mode match {
+      case "distance" =>
+        pairFlags.select(col("gidA"), col("gidB"), col("dist"))
+      case "de9im" =>
+        // fanout self rows (empty matrix, dist 0) carry the target's kind
+        val selfPacked = when(col("kindB") === 0, packMat(Relate.SELF_POINT))
+          .when(col("kindB") === 1, packMat(Relate.SELF_LINE))
+          .otherwise(packMat(Relate.SELF_AREA))
+        pairFlags.select(col("gidA"), col("gidB"),
+          when(length(col("de9im")) === 9, packMatCol("de9im"))
+            .otherwise(selfPacked).as("mat"))
+      case _ if !mayHaveBigMultis => partials(pairFlags)
+      case _ =>
+        // every row of a pair carries the pair's nA/nB, so this row test
+        // splits per pair: no pair straddles the two branches
+        val big = col("nA") > 63 || col("nB") > 63
+        // both branches scan the output of ONE shuffle, so the flags'
+        // lineage (exact refinement) runs once without a persist that
+        // nothing could release; a filter on a plain repartition would be
+        // pushed below it and read the flags twice
+        val parted = pairFlags.repartition(col("gidA"), col("gidB"))
+        val shared = org.apache.spark.sql.GraftInternal.internalDf(spark,
+          parted.queryExecution.toRdd, parted.schema)
+        val verdicts = shared.filter(big).as[FlagRow]
           .groupByKey(f => (f.gidA, f.gidB))
           .agg(RelAgg.toColumn.name("r"))
           .toDF("key", "r")
-          .select(
-            col("key._1").as("gidA"), col("key._2").as("gidB"),
-            col("r.isect").as("r_isect"),
-            col("r.coversAB").as("r_coversAB"),
-            col("r.coversBA").as("r_coversBA"),
-            col("r.containsAB").as("r_containsAB"),
-            col("r.containsBA").as("r_containsBA"),
-            col("r.equalsAB").as("r_equals"),
-            col("r.touchesAB").as("r_touches"),
-            col("r.crossesAB").as("r_crossesAB"),
-            col("r.crossesBA").as("r_crossesBA"),
-            col("r.overlapsAB").as("r_overlaps"))
-        fast.union(slow)
-      }
-
-    // dedup = false even with refs: see the duplicate-free argument above
-    relsFrom(marked, cfg, dedup = false)
-  }
-
-  /** Verdict columns over an agg1-shaped row (counts from mask popcounts). */
-  private def verdictCols(covCntA: Column, covCntB: Column, contCntA: Column,
-      contCntB: Column, eqCntA: Column, eqCntB: Column): Seq[Column] = {
-    val coversAB = covCntB === col("nB")
-    val coversBA = covCntA === col("nA")
-    val partial = (covCntA > 0 && covCntA < col("nA")) ||
-      (covCntB > 0 && covCntB < col("nB"))
-    Seq(
-      col("isect").as("r_isect"),
-      coversAB.as("r_coversAB"), coversBA.as("r_coversBA"),
-      (contCntB === col("nB")).as("r_containsAB"),
-      (contCntA === col("nA")).as("r_containsBA"),
-      (col("nA") === col("nB") && eqCntA === col("nA") &&
-        eqCntB === col("nB")).as("r_equals"),
-      (col("anyTouch") && !col("anyNotTouch")).as("r_touches"),
-      ((col("anyLLCross") && !col("anyNotCross")) || col("anyLAab"))
-        .as("r_crossesAB"),
-      ((col("anyLLCross") && !col("anyNotCross")) || col("anyLAba"))
-        .as("r_crossesBA"),
-      ((col("anyOverlap") || partial) && !coversAB && !coversBA &&
-        !col("anyLLCross")).as("r_overlaps"))
-  }
-
-  private def fastVerdicts(in: DataFrame): DataFrame = in.select(
-    Seq(col("gidA"), col("gidB")) ++ verdictCols(
-      bit_count(col("covAM")).cast("long"),
-      bit_count(col("covBM")).cast("long"),
-      bit_count(col("contAM")).cast("long"),
-      bit_count(col("contBM")).cast("long"),
-      bit_count(col("eqAM")).cast("long"),
-      bit_count(col("eqBM")).cast("long")): _*)
-
-  /** (a_id, predicate, b_id) assembly from verdict-marked pair rows; in
-    * non-self mode only side-A-first rows survive (writeRel discipline,
-    * Sweeper.cpp:2287-2288) — the join ordered A=side0, B=side1. */
-  private def relsFrom(marked: DataFrame, cfg: SpatialConfig,
-      dedup: Boolean): DataFrame = {
-    val bothDirs = cfg.selfJoin
-    def rel(cond: Column, aId: Column, pred: String, bId: Column) =
-      when(cond, struct(aId.as("a_id"), lit(pred).as("predicate"),
-        bId.as("b_id")))
-
-    val A = col("gidA"); val B = col("gidB")
-    val relArray = array(
-      rel(col("r_isect"), A, "intersects", B),
-      rel(col("r_isect") && lit(bothDirs), B, "intersects", A),
-      rel(col("r_equals"), A, "equals", B),
-      rel(col("r_equals") && lit(bothDirs), B, "equals", A),
-      rel(col("r_coversAB"), A, "covers", B),
-      rel(col("r_coversBA") && lit(bothDirs), B, "covers", A),
-      rel(col("r_containsAB"), A, "contains", B),
-      rel(col("r_containsBA") && lit(bothDirs), B, "contains", A),
-      rel(col("r_touches"), A, "touches", B),
-      rel(col("r_touches") && lit(bothDirs), B, "touches", A),
-      // crosses: line/line both directions (with retraction); line/area
-      // crosses are folded in line-side-first with no retraction
-      // (reference writes those immediately, Sweeper.cpp:3017-3020)
-      rel(col("r_crossesAB"), A, "crosses", B),
-      rel(col("r_crossesBA") && lit(bothDirs), B, "crosses", A),
-      rel(col("r_overlaps"), A, "overlaps", B),
-      rel(col("r_overlaps") && lit(bothDirs), B, "overlaps", A))
-
-    // without refs each (a,pred,b) row originates from exactly one pair
-    // group and one array slot — no final distinct shuffle needed; alias
-    // fanout can mirror a pair into both orientations, so dedup then
-    val rels = marked
-      .select(explode(relArray).as("rel"))
-      .filter(col("rel").isNotNull)
-      .select(col("rel.a_id"), col("rel.predicate"), col("rel.b_id"))
-    if (dedup) rels.distinct() else rels
-  }
-
-  private def selfMat(kind: Int): Relate.Mat = kind match {
-    case 0 => Relate.SELF_POINT
-    case 1 => Relate.SELF_LINE
-    case _ => Relate.SELF_AREA
+        // a verdict as one nA = nB = 1 partial row: emissionMask reads
+        // every predicate straight back from it
+        partials(shared.filter(!big)).union(verdicts.select(
+          col("key._1").as("gidA"), col("key._2").as("gidB"),
+          Seq(bit(col("r.isect"), 0), bit(col("r.touchesAB"), 1),
+            bit(col("r.crossesAB"), 4), bit(col("r.crossesBA"), 5),
+            bit(col("r.overlapsAB"), 6), lit(1L << 24 | 1L << 32))
+            .reduce(_ bitwiseOR _).as("packed"),
+          bit(col("r.coversBA"), 0).as("covAM"),
+          bit(col("r.coversAB"), 0).as("covBM"),
+          bit(col("r.containsBA"), 0).as("contAM"),
+          bit(col("r.containsAB"), 0).as("contBM"),
+          bit(col("r.equalsAB"), 0).as("eqAM"),
+          bit(col("r.equalsAB"), 0).as("eqBM")))
+    }
+    aggregateFromPre(spark, pre, cfg)
   }
 
   // ------------------------------------------------------------ fused path
@@ -1163,7 +1049,7 @@ object SpatialJoin {
     * '2'=111) so the reference's cellwise-MAX merge
     * (DE9IMatrix::operator+=, used Sweeper.cpp:823-856) becomes a
     * bitwise OR — the whole multi-sub merge stays one codegen'd
-    * bit_or aggregate instead of a typed mapGroups. */
+    * bit_or aggregate. */
   private[engine] def packMat(m: Relate.Mat): Long = {
     var p = 0L
     var i = 0
@@ -1202,6 +1088,13 @@ object SpatialJoin {
       s"substring('F012', bit_count(shiftright($matCol, ${3 * i}) & 7L) + 1, 1)")): _*)
   }
 
+  /** [[packMat]] as a Column over a 9-char matrix string: instr('012', c)
+    * maps F/0/1/2 to 0..3, and (1 << that) - 1 is the unary cell. */
+  private def packMatCol(matCol: String): Column =
+    (0 until 9).map(i => expr(s"shiftleft(shiftleft(1L, " +
+      s"instr('012', substring($matCol, ${i + 1}, 1))) - 1L, ${3 * i})"))
+      .reduce(_ bitwiseOR _)
+
   private[engine] val relRowSchema = StructType(Seq(
     StructField("a_id", StringType, nullable = false),
     StructField("predicate", StringType, nullable = false),
@@ -1212,10 +1105,12 @@ object SpatialJoin {
     StructField("dist", DoubleType, nullable = false),
     StructField("b_id", StringType, nullable = false)))
 
-  /** 14-slot relation emission mask from a pair's final state — the exact
-    * Scala port of [[verdictCols]] + [[relsFrom]]'s slot gating (slot 2k =
-    * predicate k A->B, slot 2k+1 = B->A, emitted only in self mode).
-    * States exist only for intersecting pairs, so the mask is never 0. */
+  /** 14-slot relation emission mask from a pair's final state: the
+    * reference's multi-geometry verdicts (the same derivation as
+    * [[RelAgg.finish]]) gated per slot (slot 2k = predicate k A->B, slot
+    * 2k+1 = B->A, emitted only in self mode, the writeRel discipline of
+    * Sweeper.cpp:2287-2288 otherwise). States exist only for intersecting
+    * pairs, so the mask is never 0. */
   private def emissionMask(s: AggState, bothDirs: Boolean): Int = {
     val covCntA = java.lang.Long.bitCount(s.covAM)
     val covCntB = java.lang.Long.bitCount(s.covBM)
@@ -1381,7 +1276,7 @@ object SpatialJoin {
 
   /** OR-merge one packed partial row (see aggRowSchema) into `s`. nA/nB
     * are identical across rows of a pair; maxSub and the flag/mask fields
-    * are monotone, so max/OR reproduces the old groupBy agg exactly. */
+    * are monotone, so max/OR is order-independent. */
   private def mergePacked(s: AggState, p: Long,
       r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
     if ((p & 1L) != 0) s.isect = true
@@ -1406,8 +1301,8 @@ object SpatialJoin {
   }
 
   /** Fused pair generation + refinement + partial aggregation. Emits
-    * agg1-shaped partial rows (predicates) or (gidA,gidB,dist) partials
-    * (distance); [[aggregateFromPre]] merges them. */
+    * packed partial rows (aggRowSchema, de9imRowSchema or distRowSchema);
+    * [[aggregateFromPre]] merges them. */
   def fusedPairs(spark: SparkSession, geoms: Dataset[SubGeom],
       cfg: SpatialConfig, activeLevels: Seq[Int] = null,
       direct: Boolean = false, rowHint: Long = -1L,
@@ -1909,20 +1804,19 @@ object SpatialJoin {
     org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema)
   }
 
-  /** Merge fused partials and assemble relations. */
+  /** Merge partial rows and assemble relations: the fused kernel's
+    * partials, or the general path's flag rows projected into the same
+    * format by [[aggregate]].
+    *
+    * NO distinct(): every output row is a function of exactly one
+    * (gidA, gidB) group — the kernel orders (a, b) by gid for self joins
+    * and by side otherwise, fanoutWith canonicalizes fanned rows the same
+    * way, a == b never merges — and a group's forward/reverse emissions
+    * differ in orientation. Both directions via explode, not a
+    * self-union: a union planned the merge's whole input lineage once per
+    * branch. */
   def aggregateFromPre(spark: SparkSession, pre: DataFrame,
       cfg: SpatialConfig): DataFrame = {
-    // NO distinct() in these two finalizations (unlike the general path's
-    // aggregate, whose refs-fanout input can seed a pair in both
-    // orientations): kernel emission is pair-canonical — processPair
-    // orders (a,b) by gid for self joins and by side otherwise, and a==b
-    // never reaches the map — so the groupBy leaves exactly one row per
-    // unordered pair and the reversed self-join projection is disjoint
-    // from fwd. The old distinct() was a second full exchange over the
-    // ENTIRE relation output, the biggest dataset in the job at scale.
-    // both directions via explode, not a self-union: the union planned the
-    // merge aggregate once per branch (double read of the kernel shuffle
-    // plus a second full aggregation pass) — see aggregate()'s note
     if (cfg.mode == "distance") {
       val agg = pre.groupBy(col("gidA"), col("gidB"))
         .agg(min(col("dist")).as("dist"))
@@ -1939,8 +1833,7 @@ object SpatialJoin {
     if (cfg.mode == "de9im") {
       // the unary-packed matrix (see packMat) makes the multi-sub merge a
       // plain bit_or hash aggregate and the string decode a codegen'd
-      // projection — the whole stage stays in whole-stage codegen (the old
-      // general-path groupByKey.mapGroups decoded strings per row)
+      // projection — the whole stage stays in whole-stage codegen
       val agg = pre.groupBy(col("gidA"), col("gidB"))
         .agg(expr("bit_or(mat)").as("mat"))
       return if (cfg.selfJoin)
@@ -1956,32 +1849,19 @@ object SpatialJoin {
           matStrCol("mat", transposed = false).as("de9im"),
           col("gidB").as("b_id"))
     }
-    // one hash exchange on the pair key, then a streaming merge: rows of
-    // complete pairs (nA==1 && nB==1 — exactly one kernel row exists for
-    // them) expand to relation rows with NO map insert; only pairs with a
-    // multi-sub side (minority class) are merged in a map and finalized
-    // when the partition's input is exhausted. Replaces the 18-expression
-    // two-stage hash agg + verdict projection + explode.
-    //
-    // MEMORY BOUND / MERGE STRATEGY: the hash merge (default) holds one
-    // ~100-byte entry per DISTINCT multi-sub pair of the partition (never
-    // the single-sub majority, and kernel partitions scale with input size
-    // via rowHint). For inputs whose pairs are overwhelmingly
-    // multi×multi-geometry, the `graft.merge=sort` session conf
-    // selects a sort-based merge instead: Tungsten sorts the partials by
-    // pair key (spilling gracefully at any size) and the merge keeps O(1)
-    // group state. Same output, verified by EngineOpsSpec.
+    // one exchange on the pair key, a Tungsten sort by it (spills at any
+    // size), then a streaming merge holding ONE group's state: rows of a
+    // pair arrive contiguous, and each closed group expands to its
+    // relation rows. Grouping every row is what makes the merge serve
+    // both paths: a pair can have several rows even when both sides are
+    // single-part (two fanned copies of one flag row).
     val selfJoin = cfg.selfJoin
-    val sortMerge = spark.conf.getOption("graft.merge").contains("sort")
-    val parted0 = pre.repartition(col("gidA"), col("gidB"))
-    val parted =
-      if (sortMerge) parted0.sortWithinPartitions(col("gidA"), col("gidB"))
-      else parted0
+    val parted = pre.repartition(col("gidA"), col("gidB"))
+      .sortWithinPartitions(col("gidA"), col("gidB"))
     val rdd = parted.queryExecution.toRdd.mapPartitions { rows =>
       import org.apache.spark.sql.catalyst.InternalRow
       val em = new RelEmitter(false)
-      if (sortMerge) new Iterator[InternalRow] {
-        // rows arrive pair-key-contiguous: one running group state
+      new Iterator[InternalRow] {
         private val cur = new AggState
         private var curA: org.apache.spark.unsafe.types.UTF8String = _
         private var curB: org.apache.spark.unsafe.types.UTF8String = _
@@ -2014,62 +1894,28 @@ object SpatialJoin {
         override def hasNext: Boolean = { fill(); em.hasRow }
         override def next(): InternalRow = { fill(); em.writeNext() }
       }
-      else {
-        val pmap = new java.util.HashMap[PKey, AggState](1 << 10)
-        val probe = new PKey(null, null)
-        val tmp = new AggState
-        new Iterator[InternalRow] {
-          private var drain: java.util.Iterator[java.util.Map.Entry[PKey, AggState]] = _
-          private def fill(): Unit = {
-            while (!em.hasRow) {
-              if (drain == null) {
-                if (!rows.hasNext) { drain = pmap.entrySet().iterator() }
-                else {
-                  val r = rows.next()
-                  val p = r.getLong(2)
-                  if ((p >>> 24 & 0xff) == 1 && (p >>> 32 & 0xff) == 1) {
-                    tmp.reset()
-                    mergePacked(tmp, p, r)
-                    // em borrows the row's UTF8Strings; the input row is not
-                    // advanced until the emitter drains, and writeNext copies
-                    // the bytes into the projection buffer
-                    em.load(r.getUTF8String(0), r.getUTF8String(1),
-                      emissionMask(tmp, selfJoin))
-                  } else {
-                    probe.a = r.getUTF8String(0); probe.b = r.getUTF8String(1)
-                    var s = pmap.get(probe)
-                    if (s == null) {
-                      s = new AggState
-                      pmap.put(new PKey(probe.a.clone(), probe.b.clone()), s)
-                    }
-                    mergePacked(s, p, r)
-                  }
-                }
-              } else {
-                if (!drain.hasNext) return
-                val e = drain.next()
-                em.load(e.getKey.a, e.getKey.b,
-                  emissionMask(e.getValue, selfJoin))
-              }
-            }
-          }
-          override def hasNext: Boolean = { fill(); em.hasRow }
-          override def next(): InternalRow = { fill(); em.writeNext() }
-        }
-      }
     }
     org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, relRowSchema)
   }
+
+  /** Relations of the fused kernel: FINAL rows straight from the kernel
+    * when the input is entirely single-part (every pair completes in its
+    * one processPair, so no merge shuffle exists), else its partial rows
+    * through [[aggregateFromPre]]. */
+  private[engine] def fusedRelations(spark: SparkSession,
+      geoms: Dataset[SubGeom], cfg: SpatialConfig, activeLevels: Seq[Int],
+      allSingle: Boolean, rowHint: Long,
+      prePacked: DataFrame = null): DataFrame =
+    if (allSingle)
+      fusedPairs(spark, geoms, cfg, activeLevels, direct = true,
+        rowHint = rowHint, prePacked = prePacked)
+    else aggregateFromPre(spark, fusedPairs(spark, geoms, cfg, activeLevels,
+      rowHint = rowHint, prePacked = prePacked), cfg)
 
   /** Full pipeline: sub-geometries (+ refs) -> relations DataFrame. */
   def run(spark: SparkSession, geoms: Dataset[SubGeom],
       refs: Dataset[RefEdge], cfg: SpatialConfig = SpatialConfig())
       : DataFrame = {
-    // typed-Aggregator groups number in the millions: keep
-    // ObjectHashAggregate in hash mode instead of its 128-key sort fallback
-    val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    if (spark.conf.getOption(fbKey).forall(_.toLong < (1 << 22)))
-      spark.conf.set(fbKey, (1 << 22).toString)
     // the payload table is scanned by several branches (stats, cover
     // explode, fanout target kinds); materialize it once
     // P2 region filter first: everything downstream (dedup, stats, cover)
@@ -2273,8 +2119,7 @@ object SpatialJoin {
       // tables by now; the expansion caches are dead — the r5 code leaked
       // the expansion on this branch (ADVICE r5)
       releaseRefCaches()
-      return aggregate(spark, fanned, cfgCs, hadRefs = true,
-        mayHaveBigMultis = bigMultis)
+      return aggregate(spark, fanned, cfgCs, mayHaveBigMultis = bigMultis)
     }
     val edges = authoredEdges ++ autoEdges
     // the driver array is materialized; the cached expansion served its
@@ -2282,35 +2127,19 @@ object SpatialJoin {
     releaseRefCaches()
     lastNumReferences = edges.length.toLong
     // drop duplicate sub-geometries from the join input: their relations
-    // come from the keeper via fanout
+    // come from the keeper via fanout. No persist: the cover reads `g`
+    // once, and the fanout's self rows collect from the cached `g0`.
+    val dupKeys = autoEdges.map(e => (e.referer, e.side, e.subId)).toSet
     val g =
-      if (autoEdges.isEmpty) g0
-      else {
-        val dupKeys = autoEdges.map(e => (e.referer, e.side, e.subId)).toSet
-        g0.filter(r => !dupKeys((r.gid, r.side, r.subId)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    if (edges.isEmpty && !bigMultis) {
-      // dominant case: fused kernel (see fusedPairs). When the stats pass
-      // proves the input is entirely single-sub, every pair completes
-      // inside the kernel (one processPair globally per pair), so the
-      // kernel emits FINAL relation rows and no merge shuffle exists
-      return if (st.allSingle)
-        fusedPairs(spark, g, cfgCs, lvls, direct = true, rowHint = nRows)
-      else aggregateFromPre(spark,
-        fusedPairs(spark, g, cfgCs, lvls, rowHint = nRows), cfgCs)
-    }
-    {
-      val cands = candidates(spark, g, cfgCs, lvls)
-      val flags = refine(spark, cands, cfgCs)
-      if (edges.isEmpty)
-        aggregate(spark, flags, cfgCs, hadRefs = false,
-          mayHaveBigMultis = bigMultis)
-      else {
-        val fanned = fanout(spark, flags, edges, g, cfgCs)
-        aggregate(spark, fanned, cfgCs, hadRefs = true,
-          mayHaveBigMultis = bigMultis)
-      }
-    }
+      if (dupKeys.isEmpty) g0
+      else g0.filter(r => !dupKeys((r.gid, r.side, r.subId)))
+    // dominant case: the fused kernel (see fusedPairs)
+    if (edges.isEmpty && !bigMultis)
+      return fusedRelations(spark, g, cfgCs, lvls, st.allSingle, nRows)
+    val flags = refine(spark, candidates(spark, g, cfgCs, lvls), cfgCs)
+    aggregate(spark,
+      if (edges.isEmpty) flags
+      else fanout(spark, flags, edges, g0, cfgCs, dropped = dupKeys),
+      cfgCs, mayHaveBigMultis = bigMultis)
   }
 }

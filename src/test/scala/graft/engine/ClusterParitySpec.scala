@@ -154,7 +154,7 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s,
           SpatialJoin.candidates(s, geoms, cfg, lvls), cfg),
-        cfg, hadRefs = false, mayHaveBigMultis = false))
+        cfg, mayHaveBigMultis = false))
       if (fused == general && fused.nonEmpty) None
       else Some(s"fusedOnly=${(fused -- general).take(3)} " +
         s"generalOnly=${(general -- fused).take(3)} n=${fused.size}")

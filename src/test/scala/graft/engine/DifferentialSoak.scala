@@ -81,7 +81,7 @@ object DifferentialSoak {
       val general = rels(SpatialJoin.aggregate(spark,
         SpatialJoin.refine(spark,
           SpatialJoin.candidates(spark, geoms, cfg, lvls), cfg),
-        cfg, hadRefs = false, mayHaveBigMultis = false), mode)
+        cfg, mayHaveBigMultis = false), mode)
       val ok = fused == general && fused.nonEmpty
       val tag = (if (cfg0.selfJoin) cfg0.mode else s"${cfg0.mode}-nonself") +
         (if (shift) "-straddle00" else "")

@@ -622,7 +622,7 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, cfg, lvls),
-          cfg), cfg, hadRefs = false, mayHaveBigMultis = false)
+          cfg), cfg, mayHaveBigMultis = false)
         .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
       assert(fused == general,
         s"mode=${cfg0.mode} fusedOnly=${(fused -- general).take(5)} " +
@@ -653,11 +653,11 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     geoms.unpersist()
   }
 
-  test("sort-based merge == hash merge == general path on multi-geometries") {
-    // the merge stage's two strategies (hash map vs sorted O(1)-state
-    // groups, graft.merge=sort) must agree on inputs where pairs actually
-    // need merging — multitests/collectiontests carry multi-sub geometries
-    // whose sub-pairs are examined in different cells (SynthGeo is all
+  test("sort merge == general path on multi-geometries") {
+    // the merge of the kernel's partial rows must agree with the general
+    // path on inputs where pairs actually need merging —
+    // multitests/collectiontests carry multi-sub geometries whose
+    // sub-pairs are examined in different cells (SynthGeo is all
     // single-sub, so the soak never closes a multi group)
     val s = spark
     def rels(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
@@ -674,23 +674,17 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val geoms = geoms0.cache()
       val p = SpatialJoin.plan(geoms, SpatialConfig(dupMinPoints = -1))
       val (cfg, lvls) = (p.cfg, p.levels)
-      val hashM = rels(SpatialJoin.aggregateFromPre(s,
+      val sortM = rels(SpatialJoin.aggregateFromPre(s,
         SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg))
-      s.conf.set("graft.merge", "sort")
-      val sortM = try rels(SpatialJoin.aggregateFromPre(s,
-        SpatialJoin.fusedPairs(s, geoms, cfg, lvls), cfg))
-      finally s.conf.unset("graft.merge")
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, cfg, lvls),
-          cfg), cfg, hadRefs = false, mayHaveBigMultis = false))
-      assert(hashM == general, s"$ds hash merge diverges: " +
-        s"+${(hashM -- general).take(5)} -${(general -- hashM).take(5)}")
+          cfg), cfg, mayHaveBigMultis = false))
       assert(sortM == general, s"$ds sort merge diverges: " +
         s"+${(sortM -- general).take(5)} -${(general -- sortM).take(5)}")
-      assert(hashM.nonEmpty)
+      assert(sortM.nonEmpty)
       // de9im on the same multi-sub fixtures: the fused kernel's unary
-      // bit_or matrix merge must equal the general path's cellwise-max
-      // mapGroups merge on pairs whose sub-matrices really merge
+      // bit_or matrix merge must equal the general path's on pairs whose
+      // sub-matrices really merge
       def matRels(df: org.apache.spark.sql.DataFrame) =
         df.selectExpr("a_id", "cast(de9im as string)", "b_id")
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -700,7 +694,7 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         SpatialJoin.fusedPairs(s, geoms, dCfg, lvls), dCfg))
       val dGeneral = matRels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, dCfg, lvls),
-          dCfg), dCfg, hadRefs = false, mayHaveBigMultis = false))
+          dCfg), dCfg, mayHaveBigMultis = false))
       assert(dFused == dGeneral, s"$ds de9im fused/general diverge: " +
         s"+${(dFused -- dGeneral).take(5)} -${(dGeneral -- dFused).take(5)}")
       assert(dFused.nonEmpty)
