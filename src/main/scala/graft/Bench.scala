@@ -470,8 +470,10 @@ object Bench {
       // when the memory probe says the box can't hold the 8x input safely.
       // the sandbox host shows 1.5-4x interference swings: take the min of
       // two runs per level and INTERLEAVE the levels (low,high,low,high) so
-      // a drifting noise window cannot skew the ratio systematically; 4x
-      // partitions per core pack short tasks better at low core counts.
+      // a drifting noise window cannot skew the ratio systematically. The
+      // 4x-per-core partition conf does not shape the fused path: its kernel
+      // and merge exchanges are planned from rows and cores
+      // (SpatialJoin.exchangeParts).
       var wallLow = 0.0; var wallHigh = 0.0
       val lows = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       val highs = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]

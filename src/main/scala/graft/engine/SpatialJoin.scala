@@ -101,6 +101,17 @@ object SpatialJoin {
     math.min(math.max(target.toLong, 16L), (WORLD_W / 4.0).toLong)
   }
 
+  /** Partition count of the fused path's two exchanges (the kernel's cell
+    * exchange and the sort merge's pair-key exchange), planned from the
+    * input and the cores alone: two tasks per core, so a slow cell has
+    * straggler headroom, and one more per 100k rows (`rowHint`, < 0 when
+    * unknown) so a task's sort stays in memory (10M geoms at a fixed 32
+    * spilled 2.8 GB). Past that, per-task cost dominates: each map task
+    * opens one writer per reduce partition, and at 200 kernel tasks of
+    * ~400 rows each (60k geoms, 4 cores) it was ~96% of the stage. */
+  private[engine] def exchangeParts(cores: Int, rowHint: Long): Int =
+    math.max(2 * cores, (rowHint / 100000L).toInt)
+
   /** bbox padding for within-distance mode (reference getPaddedBoundingBox,
     * Sweeper.h:350-388); identity otherwise. Pure codegen'd column math —
     * same double ops as Dist.distFactor (exp/atan/cos all route through
@@ -922,7 +933,8 @@ object SpatialJoin {
     *   a side folded by the typed [[RelAgg]] instead; each verdict enters
     *   the merge as one partial row. */
   def aggregate(spark: SparkSession, flags: DataFrame,
-      cfg: SpatialConfig, mayHaveBigMultis: Boolean = false): DataFrame = {
+      cfg: SpatialConfig, mayHaveBigMultis: Boolean = false,
+      rowHint: Long = -1L): DataFrame = {
     import spark.implicits._
     val pairFlags = flags.filter(col("gidA") =!= col("gidB"))
     def bit(c: Column, i: Int): Column =
@@ -992,7 +1004,7 @@ object SpatialJoin {
           bit(col("r.equalsAB"), 0).as("eqAM"),
           bit(col("r.equalsAB"), 0).as("eqBM")))
     }
-    aggregateFromPre(spark, pre, cfg)
+    aggregateFromPre(spark, pre, cfg, rowHint)
   }
 
   // ------------------------------------------------------------ fused path
@@ -1363,29 +1375,15 @@ object SpatialJoin {
     val cs = cfg2.cellSize
     val src = coverFromPacked(
       if (prePacked != null) prePacked else packedRows(geoms, cfg2), cs, lvls)
-    // explicit partition count: with a bare repartition(col) AQE coalesces
-    // the 67 MB cell shuffle to ~6 partitions, which packs badly onto the
-    // executor cores and loses skew headroom — kernel cost per row is far
-    // higher than a byte-count target assumes. AQE's skew SPLIT never
-    // applies to a mapPartitions-consumed exchange anyway (join-only), so
-    // the explicit count gives strictly better balance.
-    // partitions grow with the input (when run() passes its stats-pass row
-    // count) so per-task sort volume stays bounded: at 10M geoms the fixed
-    // 32-partition sort spilled 2.8 GB; ~100k sub-geometries per kernel
-    // task keeps the sorter in memory and the tasks short enough for AQE-
-    // free balance. Never shrinks below the configured parallelism, and
-    // never below 2 tasks per available core: kernel task cost varies with
-    // cell content, so 1 task/core has no straggler headroom — interleaved
-    // A/B at 32 cores measured 64 partitions ~5-7% faster than 32 (min
-    // 3.62 vs 3.88 s on the 1M headline) while the 4x/core scaling legs
-    // and the rowHint path are unaffected (they already exceed 2x).
-    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val floorParts =
-      math.max(confParts, 2 * spark.sparkContext.defaultParallelism)
-    val kernelParts =
-      if (rowHint > 0) math.max(floorParts, (rowHint / 100000L).toInt)
-      else floorParts
-    val shuffled = src.repartition(kernelParts, col("cell"))
+    // planned partition count (exchangeParts), not a bare repartition(col):
+    // AQE would coalesce the cell shuffle by bytes (~6 partitions at 67 MB),
+    // which packs badly onto the cores — kernel cost per row is far above
+    // what a byte target assumes — and its skew split never applies to a
+    // mapPartitions-consumed exchange. The session's partition conf is not
+    // read: the kernel's task count follows rows and cores only.
+    val shuffled = src.repartition(
+      exchangeParts(spark.sparkContext.defaultParallelism, rowHint),
+      col("cell"))
     // sort by cell ALONE: a single long sort column satisfies the whole
     // ordering from its 8-byte prefix, so Tungsten takes the RADIX path
     // (zero record comparisons). The previous (cell, bb0) two-column sort
@@ -1393,7 +1391,7 @@ object SpatialJoin {
     // comparison on every element move. The minX-ascending order the
     // per-cell sweep needs is restored inside the kernel by sorting the
     // DECODED GeomRefs of each cell (bounded by the task's row count,
-    // which kernelParts scales with input size).
+    // which exchangeParts scales with input size).
     val sorted = shuffled.sortWithinPartitions(col("cell"))
     val accChecks = spark.sparkContext.longAccumulator("graft.exactChecks")
     val accDecided = spark.sparkContext.longAccumulator("graft.decided")
@@ -1733,7 +1731,7 @@ object SpatialJoin {
       // pair generation for the completed cell: minX sort + sweep. Runs
       // with the COMPLETED cell's rect/level state (callers update those
       // only after flushing). Buffer space is bounded by the task's row
-      // count (kernelParts scales with the input).
+      // count (exchangeParts scales with the input).
       def flushCell(): Unit = if (cellN > 0) {
         java.util.Arrays.sort(cellArr, 0, cellN, refCmp)
         natives.clear(); visitors.clear()
@@ -1814,9 +1812,10 @@ object SpatialJoin {
     * way, a == b never merges — and a group's forward/reverse emissions
     * differ in orientation. Both directions via explode, not a
     * self-union: a union planned the merge's whole input lineage once per
-    * branch. */
+    * branch. `rowHint` sizes the predicate merge's exchange as the
+    * kernel's ([[exchangeParts]]). */
   def aggregateFromPre(spark: SparkSession, pre: DataFrame,
-      cfg: SpatialConfig): DataFrame = {
+      cfg: SpatialConfig, rowHint: Long = -1L): DataFrame = {
     if (cfg.mode == "distance") {
       val agg = pre.groupBy(col("gidA"), col("gidB"))
         .agg(min(col("dist")).as("dist"))
@@ -1856,7 +1855,9 @@ object SpatialJoin {
     // both paths: a pair can have several rows even when both sides are
     // single-part (two fanned copies of one flag row).
     val selfJoin = cfg.selfJoin
-    val parted = pre.repartition(col("gidA"), col("gidB"))
+    val parted = pre.repartition(
+        exchangeParts(spark.sparkContext.defaultParallelism, rowHint),
+        col("gidA"), col("gidB"))
       .sortWithinPartitions(col("gidA"), col("gidB"))
     val rdd = parted.queryExecution.toRdd.mapPartitions { rows =>
       import org.apache.spark.sql.catalyst.InternalRow
@@ -1910,7 +1911,7 @@ object SpatialJoin {
       fusedPairs(spark, geoms, cfg, activeLevels, direct = true,
         rowHint = rowHint, prePacked = prePacked)
     else aggregateFromPre(spark, fusedPairs(spark, geoms, cfg, activeLevels,
-      rowHint = rowHint, prePacked = prePacked), cfg)
+      rowHint = rowHint, prePacked = prePacked), cfg, rowHint)
 
   /** Full pipeline: sub-geometries (+ refs) -> relations DataFrame. */
   def run(spark: SparkSession, geoms: Dataset[SubGeom],
@@ -2119,7 +2120,7 @@ object SpatialJoin {
       // tables by now; the expansion caches are dead — the r5 code leaked
       // the expansion on this branch (ADVICE r5)
       releaseRefCaches()
-      return aggregate(spark, fanned, cfgCs, mayHaveBigMultis = bigMultis)
+      return aggregate(spark, fanned, cfgCs, bigMultis, rowHint = nRows)
     }
     val edges = authoredEdges ++ autoEdges
     // the driver array is materialized; the cached expansion served its
@@ -2140,6 +2141,6 @@ object SpatialJoin {
     aggregate(spark,
       if (edges.isEmpty) flags
       else fanout(spark, flags, edges, g0, cfgCs, dropped = dupKeys),
-      cfgCs, mayHaveBigMultis = bigMultis)
+      cfgCs, bigMultis, rowHint = nRows)
   }
 }

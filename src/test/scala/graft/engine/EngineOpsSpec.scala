@@ -653,6 +653,61 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     geoms.unpersist()
   }
 
+  test("fused exchange partition count: two per core, one per 100k rows") {
+    for (((cores, rows), want) <- Seq((4, 60000L) -> 8, (4, 5000000L) -> 50,
+        (32, 1000000L) -> 64, (4, -1L) -> 8, (32, -1L) -> 64))
+      assert(SpatialJoin.exchangeParts(cores, rows) == want,
+        s"$cores cores, $rows rows")
+  }
+
+  test("fused path plans its exchanges without the session's partition conf") {
+    // run() with spark.sql.shuffle.partitions at 1 and at 200: the kernel
+    // and merge exchanges carry exchangeParts' count both times, and the
+    // relations are the same multiset
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    val n = 6000L
+    val plain = SynthGeo.dataset(s, n).cache()
+    // every tenth id pair folds into a two-part geometry, so pairs with
+    // it close in the merge (the plain input is all single-part: direct)
+    val multi = plain.map { g =>
+      val id = g.gid.drop(1).toLong
+      if (id % 10 < 2)
+        g.copy(gid = s"m${id / 10}", subId = (id % 10).toInt, nSubs = 2)
+      else g
+    }.cache()
+    val refs = s.emptyDataset[RefEdge]
+    val want = SpatialJoin.exchangeParts(s.sparkContext.defaultParallelism, n)
+    def shuffleParts(rdd: RDD[_]): Seq[Int] = rdd.dependencies.flatMap {
+      case d: ShuffleDependency[_, _, _] =>
+        d.partitioner.numPartitions +: shuffleParts(d.rdd)
+      case d => shuffleParts(d.rdd)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    try {
+      for ((geoms, exchanges) <- Seq(multi -> 2, plain -> 1)) {
+        val runs = Seq("1", "200").map { parts =>
+          s.conf.set(key, parts)
+          val df = SpatialJoin.run(s, geoms, refs)
+          val rdd = df.queryExecution.toRdd
+          assert(shuffleParts(rdd) == Seq.fill(exchanges)(want),
+            s"conf $parts, $exchanges exchanges")
+          assert(rdd.getNumPartitions == want, s"conf $parts")
+          df.as[(String, String, String)].collect().sorted.toSeq
+        }
+        assert(runs.head.nonEmpty)
+        assert(runs(0) == runs(1), s"relations differ ($exchanges exchanges)")
+        if (exchanges == 2) assert(runs.head.exists(_._1.startsWith("m")))
+      }
+    } finally {
+      s.conf.set(key, prev)
+      multi.unpersist(); plain.unpersist()
+    }
+  }
+
   test("sort merge == general path on multi-geometries") {
     // the merge of the kernel's partial rows must agree with the general
     // path on inputs where pairs actually need merging —
