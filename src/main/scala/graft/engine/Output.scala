@@ -24,8 +24,10 @@ final case class OutputFormat(
   * OutputWriter.h + Sweeper::writeRel, Sweeper.cpp:2282-2307): one line per
   * relation, `prefix + idA + sep + idB + suffix`, where sep is the
   * configured predicate string, `"\t" + matrix + "\t"` in DE-9IM mode
-  * (Sweeper.cpp:849) or `"\t" + meters + "\t"` in distance mode
-  * (Sweeper.cpp:807, std::to_string = fixed 6 decimals). The reference's
+  * (Sweeper.cpp:849) or `"\t" + meters + "\t"` in distance mode, where
+  * meters is the reference's `util::formatFloat(dist, 4)`
+  * (Sweeper.cpp:2378-2380): 4 fixed decimals with trailing zeros and a
+  * trailing dot trimmed (12.5, 3, 0.0042). The reference's
   * `-o out[.gz|.bz2]` compressed writers (OutputWriter.h:55-70) map to the
   * text sink's compression codec, chosen from the same path suffix. */
 object RelationText {
@@ -38,7 +40,8 @@ object RelationText {
     val Array(aCol, mCol, bCol) = rels.columns
     val sep = cfg.mode match {
       case "distance" =>
-        concat(lit("\t"), format_string("%.6f", col(mCol)), lit("\t"))
+        concat(lit("\t"), regexp_replace(
+          format_string("%.4f", col(mCol)), "\\.?0+$", ""), lit("\t"))
       case "de9im" =>
         concat(lit("\t"), col(mCol), lit("\t"))
       case _ =>

@@ -921,11 +921,11 @@ object SpatialJoin {
 
   /** Aggregate sub-pair flag rows into relations per (gidA, gidB),
     * reproducing the reference's multiOut semantics
-    * (Sweeper.cpp:788-1059). Each flag row is projected into the fused
-    * kernel's partial-row format — the same fields processPair writes —
-    * and [[aggregateFromPre]], the one merge of both paths, folds them.
-    * Output: (a_id, predicate, b_id) in predicates mode; (a_id, matrix,
-    * b_id) in de9im mode; (a_id, dist, b_id) in distance mode.
+    * (Sweeper.cpp:788-1059). Each flag row of every mode is projected into
+    * the fused kernel's partial-row format — the same fields processPair
+    * writes — and [[aggregateFromPre]], the one merge of both paths, folds
+    * them. Output: (a_id, predicate, b_id) in predicates mode; (a_id,
+    * matrix, b_id) in de9im mode; (a_id, dist, b_id) in distance mode.
     *
     * @param mayHaveBigMultis whether any geometry has more than 63 parts
     *   (sub ids that overflow the 64-bit sub masks). run() derives it from
@@ -941,8 +941,17 @@ object SpatialJoin {
       when(c, lit(1L << i)).otherwise(lit(0L))
     def subBit(flag: String, sub: String): Column =
       expr(s"IF($flag, shiftleft(1L, $sub), 0L)")
-    // per flag row: the packed flags/sub/n word and the six sub masks of
-    // aggRowSchema (sub ids < 64 here)
+    // de9im: the packed matrix; a fanout self row (empty matrix) carries
+    // the target's kind
+    val mat =
+      if (cfg.mode != "de9im") lit(0L)
+      else when(length(col("de9im")) === 9, packMatCol("de9im"))
+        .when(col("kindB") === 0, packMat(Relate.SELF_POINT))
+        .when(col("kindB") === 1, packMat(Relate.SELF_LINE))
+        .otherwise(packMat(Relate.SELF_AREA))
+    // per flag row: the packed flags/sub/n word, the six sub masks, the
+    // matrix and the distance of aggRowSchema (sub ids < 64 where the
+    // predicate fields are read)
     def partials(in: DataFrame): DataFrame = in.select(col("gidA"),
       col("gidB"),
       Seq(bit(col("isect"), 0), bit(col("touch"), 1),
@@ -960,21 +969,13 @@ object SpatialJoin {
       subBit("contAinB", "subA").as("contAM"),
       subBit("contBinA", "subB").as("contBM"),
       subBit("subEq", "subA").as("eqAM"),
-      subBit("subEq", "subB").as("eqBM"))
+      subBit("subEq", "subB").as("eqBM"),
+      mat.as("mat"), col("dist"))
 
-    val pre = cfg.mode match {
-      case "distance" =>
-        pairFlags.select(col("gidA"), col("gidB"), col("dist"))
-      case "de9im" =>
-        // fanout self rows (empty matrix, dist 0) carry the target's kind
-        val selfPacked = when(col("kindB") === 0, packMat(Relate.SELF_POINT))
-          .when(col("kindB") === 1, packMat(Relate.SELF_LINE))
-          .otherwise(packMat(Relate.SELF_AREA))
-        pairFlags.select(col("gidA"), col("gidB"),
-          when(length(col("de9im")) === 9, packMatCol("de9im"))
-            .otherwise(selfPacked).as("mat"))
-      case _ if !mayHaveBigMultis => partials(pairFlags)
-      case _ =>
+    val pre =
+      if (!mayHaveBigMultis || cfg.mode == "distance" || cfg.mode == "de9im")
+        partials(pairFlags)
+      else {
         // every row of a pair carries the pair's nA/nB, so this row test
         // splits per pair: no pair straddles the two branches
         val big = col("nA") > 63 || col("nB") > 63
@@ -1002,8 +1003,9 @@ object SpatialJoin {
           bit(col("r.containsBA"), 0).as("contAM"),
           bit(col("r.containsAB"), 0).as("contBM"),
           bit(col("r.equalsAB"), 0).as("eqAM"),
-          bit(col("r.equalsAB"), 0).as("eqBM")))
-    }
+          bit(col("r.equalsAB"), 0).as("eqBM"),
+          lit(0L).as("mat"), lit(0.0).as("dist")))
+      }
     aggregateFromPre(spark, pre, cfg, rowHint)
   }
 
@@ -1021,47 +1023,27 @@ object SpatialJoin {
 
   import org.apache.spark.sql.types._
 
-  /** Packed partial-state row: the 8 flag booleans, maxSubA/maxSubB and
-    * nA/nB live in ONE long (the fused path caps nSubs at 63, so every
-    * field fits a byte) — 9 columns instead of 20 keeps the writeState
+  /** Partial-state row of every mode, written by the kernel and by
+    * [[aggregate]], folded by [[aggregateFromPre]]. The 8 flag booleans,
+    * maxSubA/maxSubB and nA/nB live in ONE long (the fused path caps
+    * nSubs at 63, so every field fits a byte), which keeps the writeState
     * projection, the merge shuffle, and the merge-stage decode narrow.
-    * Layout: bits 0-7 flags (isect, anyTouch, anyNotTouch, anyLLCross,
-    * anyLAab, anyLAba, anyOverlap, anyNotCross), 8-15 maxSubA, 16-23
-    * maxSubB, 24-31 nA, 32-39 nB. */
-  private val aggRowSchema = StructType(Seq(
-    StructField("gidA", StringType, nullable = false),
-    StructField("gidB", StringType, nullable = false),
-    StructField("packed", LongType, nullable = false),
-    StructField("covAM", LongType, nullable = false),
-    StructField("covBM", LongType, nullable = false),
-    StructField("contAM", LongType, nullable = false),
-    StructField("contBM", LongType, nullable = false),
-    StructField("eqAM", LongType, nullable = false),
-    StructField("eqBM", LongType, nullable = false)))
-
-  private val distRowSchema = StructType(Seq(
-    StructField("gidA", StringType, nullable = false),
-    StructField("gidB", StringType, nullable = false),
-    StructField("dist", DoubleType, nullable = false)))
-
-  /** de9im-mode partial row: the 9-cell matrix packed into one long
-    * (see [[packMat]]), merged downstream by a codegen'd bit_or. */
-  private val de9imRowSchema = StructType(Seq(
-    StructField("gidA", StringType, nullable = false),
-    StructField("gidB", StringType, nullable = false),
-    StructField("mat", LongType, nullable = false)))
-
-  private val de9imRelSchema = StructType(Seq(
-    StructField("a_id", StringType, nullable = false),
-    StructField("de9im", StringType, nullable = false),
-    StructField("b_id", StringType, nullable = false)))
+    * `packed` layout: bits 0-7 flags (isect, anyTouch, anyNotTouch,
+    * anyLLCross, anyLAab, anyLAba, anyOverlap, anyNotCross), 8-15 maxSubA,
+    * 16-23 maxSubB, 24-31 nA, 32-39 nB. The six sub masks are OR-merged,
+    * `mat` (the de9im matrix, see [[packMat]]) is OR-merged and `dist` is
+    * min-merged; each mode's emission reads only its own fields. */
+  private val aggRowSchema = StructType(
+    Seq("gidA", "gidB").map(StructField(_, StringType, nullable = false)) ++
+    Seq("packed", "covAM", "covBM", "contAM", "contBM", "eqAM", "eqBM",
+      "mat").map(StructField(_, LongType, nullable = false)) :+
+    StructField("dist", DoubleType, nullable = false))
 
   /** DE-9IM matrix packed into one long: 3 bits per cell, row-major,
     * cell values encoded unary-monotone (F=000, '0'=001, '1'=011,
     * '2'=111) so the reference's cellwise-MAX merge
     * (DE9IMatrix::operator+=, used Sweeper.cpp:823-856) becomes a
-    * bitwise OR — the whole multi-sub merge stays one codegen'd
-    * bit_or aggregate. */
+    * bitwise OR of the partial rows' `mat`. */
   private[engine] def packMat(m: Relate.Mat): Long = {
     var p = 0L
     var i = 0
@@ -1091,15 +1073,6 @@ object SpatialJoin {
     new String(cs)
   }
 
-  /** Same decode as a pure Column over the packed long (bit_count maps
-    * the unary cell 0/1/3/7 to an index into "F012"), so the de9im
-    * merge stage stays inside whole-stage codegen end to end. */
-  private def matStrCol(matCol: String, transposed: Boolean): Column = {
-    val order = if (transposed) MAT_T.toSeq else (0 until 9)
-    concat(order.map(i => expr(
-      s"substring('F012', bit_count(shiftright($matCol, ${3 * i}) & 7L) + 1, 1)")): _*)
-  }
-
   /** [[packMat]] as a Column over a 9-char matrix string: instr('012', c)
     * maps F/0/1/2 to 0..3, and (1 << that) - 1 is the unary cell. */
   private def packMatCol(matCol: String): Column =
@@ -1107,15 +1080,16 @@ object SpatialJoin {
       s"instr('012', substring($matCol, ${i + 1}, 1))) - 1L, ${3 * i})"))
       .reduce(_ bitwiseOR _)
 
-  private[engine] val relRowSchema = StructType(Seq(
-    StructField("a_id", StringType, nullable = false),
-    StructField("predicate", StringType, nullable = false),
-    StructField("b_id", StringType, nullable = false)))
-
-  private val distRelSchema = StructType(Seq(
-    StructField("a_id", StringType, nullable = false),
-    StructField("dist", DoubleType, nullable = false),
-    StructField("b_id", StringType, nullable = false)))
+  /** Relation schema of a mode: (a_id, predicate | de9im | dist, b_id). */
+  private def relSchema(mode: String): StructType = {
+    val mid = mode match {
+      case "distance" => StructField("dist", DoubleType, nullable = false)
+      case "de9im" => StructField("de9im", StringType, nullable = false)
+      case _ => StructField("predicate", StringType, nullable = false)
+    }
+    StructType(Seq(StructField("a_id", StringType, nullable = false), mid,
+      StructField("b_id", StringType, nullable = false)))
+  }
 
   /** 14-slot relation emission mask from a pair's final state: the
     * reference's multi-geometry verdicts (the same derivation as
@@ -1153,17 +1127,15 @@ object SpatialJoin {
     m
   }
 
-  /** Expands (a, b, emission mask) / (a, b, dist) into final relation
-    * InternalRows, one per writeNext() call, reusing one projection buffer.
-    * Instantiate per partition. */
-  private final class RelEmitter(distMode: Boolean,
-      de9imMode: Boolean = false) {
+  /** Expands a pair's final state into the mode's relation InternalRows
+    * ([[relSchema]]), one per writeNext() call, reusing one projection
+    * buffer. Instantiate per partition. */
+  private final class RelEmitter(mode: String) {
     import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
     import org.apache.spark.unsafe.types.UTF8String
-    private val schema =
-      if (distMode) distRelSchema
-      else if (de9imMode) de9imRelSchema
-      else relRowSchema
+    private val distMode = mode == "distance"
+    private val de9imMode = mode == "de9im"
+    private val schema = relSchema(mode)
     private val out = new SpecificInternalRow(schema)
     private val proj = UnsafeProjection.create(schema)
     private val preds = Array("intersects", "equals", "covers", "contains",
@@ -1172,18 +1144,17 @@ object SpatialJoin {
     private var a: UTF8String = _
     private var b: UTF8String = _
     private var matL = 0L
-    def load(a0: UTF8String, b0: UTF8String, m: Int): Unit = {
-      a = a0; b = b0; mask = m
-    }
-    def loadDist(a0: UTF8String, b0: UTF8String, d: Double,
+    /** Predicates: the slots of [[emissionMask]]. Distance and de9im:
+      * slot 0 = A->B, slot 1 = B->A (self mode only), the matrix
+      * transposed there. Copies what it needs out of `s`. */
+    def loadState(a0: UTF8String, b0: UTF8String, s: AggState,
         bothDirs: Boolean): Unit = {
-      a = a0; b = b0; out.setDouble(1, d); mask = if (bothDirs) 3 else 1
-    }
-    /** de9im: slot 0 = A->B with the matrix as computed, slot 1 = B->A
-      * with its transpose (self mode only). */
-    def loadMat(a0: UTF8String, b0: UTF8String, m: Long,
-        bothDirs: Boolean): Unit = {
-      a = a0; b = b0; matL = m; mask = if (bothDirs) 3 else 1
+      a = a0; b = b0
+      if (distMode) out.setDouble(1, s.dist)
+      else if (de9imMode) matL = s.matL
+      mask =
+        if (distMode || de9imMode) { if (bothDirs) 3 else 1 }
+        else emissionMask(s, bothDirs)
     }
     def hasRow: Boolean = mask != 0
     def writeNext(): org.apache.spark.sql.catalyst.InternalRow = {
@@ -1286,9 +1257,10 @@ object SpatialJoin {
       s.nA.toLong << 24 | s.nB.toLong << 32
   }
 
-  /** OR-merge one packed partial row (see aggRowSchema) into `s`. nA/nB
-    * are identical across rows of a pair; maxSub and the flag/mask fields
-    * are monotone, so max/OR is order-independent. */
+  /** Merge one partial row (see aggRowSchema) into `s`. nA/nB are
+    * identical across rows of a pair; maxSub, the flag/mask fields, the
+    * matrix and the distance are monotone, so max/OR/min is
+    * order-independent. */
   private def mergePacked(s: AggState, p: Long,
       r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
     if ((p & 1L) != 0) s.isect = true
@@ -1310,11 +1282,14 @@ object SpatialJoin {
     s.covAM |= r.getLong(3); s.covBM |= r.getLong(4)
     s.contAM |= r.getLong(5); s.contBM |= r.getLong(6)
     s.eqAM |= r.getLong(7); s.eqBM |= r.getLong(8)
+    s.matL |= r.getLong(9)
+    val d = r.getDouble(10)
+    if (d < s.dist) s.dist = d
   }
 
   /** Fused pair generation + refinement + partial aggregation. Emits
-    * packed partial rows (aggRowSchema, de9imRowSchema or distRowSchema);
-    * [[aggregateFromPre]] merges them. */
+    * partial rows (aggRowSchema) that [[aggregateFromPre]] merges, or, in
+    * direct mode, final relation rows. */
   def fusedPairs(spark: SparkSession, geoms: Dataset[SubGeom],
       cfg: SpatialConfig, activeLevels: Seq[Int] = null,
       direct: Boolean = false, rowHint: Long = -1L,
@@ -1351,19 +1326,7 @@ object SpatialJoin {
     // every pair is complete after its one processPair (first-common-cell +
     // unique level), so the drain emits FINAL relation rows and the merge
     // shuffle never exists
-    val schema =
-      if (direct) {
-        if (distMode) distRelSchema
-        else if (de9imMode) de9imRelSchema
-        else relRowSchema
-      }
-      else if (distMode) distRowSchema
-      else if (de9imMode) de9imRowSchema
-      else aggRowSchema
-    val stateSchema =
-      if (distMode) distRowSchema
-      else if (de9imMode) de9imRowSchema
-      else aggRowSchema
+    val schema = if (direct) relSchema(cfg.mode) else aggRowSchema
 
     // narrow shuffle rows: UnsafeRow spends a full 8-byte word per field,
     // so the five small ints pack into one `meta` int (side b0, kind b1-2,
@@ -1411,8 +1374,8 @@ object SpatialJoin {
       val tcFss = org.apache.spark.TaskContext.get()
       if (tcFss != null) tcFss.addTaskCompletionListener[Unit](_ =>
         graft.geom.EdgeIndex.enabled = true)
-      val proj = UnsafeProjection.create(stateSchema)
-      val out = new SpecificInternalRow(stateSchema)
+      val proj = UnsafeProjection.create(aggRowSchema)
+      val out = new SpecificInternalRow(aggRowSchema)
       val aggMap = new java.util.HashMap[PKey, AggState](1 << 12)
       // split buffers: a pair is examined only at level max(nlvlA, nlvlB),
       // so at least one side must be NATIVE to the current level —
@@ -1496,6 +1459,27 @@ object SpatialJoin {
           (math.floor((x + w2) / csLD).toLong + CELL_BIAS) * (1L << CELL_XY_BITS) +
           (math.floor((y + w2) / csLD).toLong + CELL_BIAS)
 
+      // an intersecting sub-pair: records the parts and returns the
+      // pair's state for the verdict's own flags
+      def isectState(a: GeomRef, b: GeomRef): AggState = {
+        val s = stateOf(a.gid, b.gid)
+        s.nA = a.nSubs; s.nB = b.nSubs
+        if (a.subId > s.maxSubA) s.maxSubA = a.subId
+        if (b.subId > s.maxSubB) s.maxSubB = b.subId
+        s.isect = true
+        s
+      }
+
+      // a shortcut's containment verdict, decided without the exact
+      // kernel: sub a inside b when aInB, else sub b inside a
+      def contained(a: GeomRef, b: GeomRef, aInB: Boolean): Unit = {
+        accDecided.add(1)
+        val s = isectState(a, b)
+        s.anyNotTouch = true; s.anyNotCross = true
+        if (aInB) { s.covAM |= 1L << a.subId; s.contAM |= 1L << a.subId }
+        else { s.covBM |= 1L << b.subId; s.contBM |= 1L << b.subId }
+      }
+
       def processPair(p: GeomRef, q: GeomRef): Unit = {
         accPairTests.add(1)
         // cheap symmetric rejects first; the UTF8String gid compare is the
@@ -1562,23 +1546,9 @@ object SpatialJoin {
           // BoxIds.h:261-351 used at Sweeper.cpp:1670-1690; kill switch
           // --no-box-ids): b lies strictly inside a cell that is entirely
           // interior to polygon a -> a contains b, no exact kernel
-          accDecided.add(1)
-          val s = stateOf(a.gid, b.gid)
-          s.nA = a.nSubs; s.nB = b.nSubs
-          if (a.subId > s.maxSubA) s.maxSubA = a.subId
-          if (b.subId > s.maxSubB) s.maxSubB = b.subId
-          s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
-          s.covBM |= 1L << b.subId
-          s.contBM |= 1L << b.subId
+          contained(a, b, aInB = false)
         } else if (useBox && b.kind == 2 && insideRect(a) && isCellFull(b)) {
-          accDecided.add(1)
-          val s = stateOf(a.gid, b.gid)
-          s.nA = a.nSubs; s.nB = b.nSubs
-          if (a.subId > s.maxSubA) s.maxSubA = a.subId
-          if (b.subId > s.maxSubB) s.maxSubB = b.subId
-          s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
-          s.covAM |= 1L << a.subId
-          s.contAM |= 1L << a.subId
+          contained(a, b, aInB = true)
         } else {
           // P7 inner/outer pre-checks (reference Sweeper.cpp:1613-1651):
           // superset forms disjoint -> reject; a superset strictly inside
@@ -1592,25 +1562,11 @@ object SpatialJoin {
               if (!Relate.relate(aS, bS).isect) { accDecided.add(1); return }
             }
             if (b.ioInner != null && Relate.relate(aS, b.ioInner).aContInB) {
-              accDecided.add(1)
-              val s = stateOf(a.gid, b.gid)
-              s.nA = a.nSubs; s.nB = b.nSubs
-              if (a.subId > s.maxSubA) s.maxSubA = a.subId
-              if (b.subId > s.maxSubB) s.maxSubB = b.subId
-              s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
-              s.covAM |= 1L << a.subId
-              s.contAM |= 1L << a.subId
+              contained(a, b, aInB = true)
               return
             }
             if (a.ioInner != null && Relate.relate(bS, a.ioInner).aContInB) {
-              accDecided.add(1)
-              val s = stateOf(a.gid, b.gid)
-              s.nA = a.nSubs; s.nB = b.nSubs
-              if (a.subId > s.maxSubA) s.maxSubA = a.subId
-              if (b.subId > s.maxSubB) s.maxSubB = b.subId
-              s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
-              s.covBM |= 1L << b.subId
-              s.contBM |= 1L << b.subId
+              contained(a, b, aInB = false)
               return
             }
           }
@@ -1618,11 +1574,7 @@ object SpatialJoin {
           val r = Relate.relate(a.g, b.g)
           if (pairStats && !r.isect) accIsectMiss.add(1)
           if (r.isect) {
-            val s = stateOf(a.gid, b.gid)
-            s.nA = a.nSubs; s.nB = b.nSubs
-            if (a.subId > s.maxSubA) s.maxSubA = a.subId
-            if (b.subId > s.maxSubB) s.maxSubB = b.subId
-            s.isect = true
+            val s = isectState(a, b)
             if (r.touches) s.anyTouch = true
             if (r.interiorIsect) s.anyNotTouch = true
             if (r.crosses) {
@@ -1680,14 +1632,11 @@ object SpatialJoin {
       def writeState(k: PKey, s: AggState): InternalRow = {
         out.update(0, k.a)
         out.update(1, k.b)
-        if (distMode) out.setDouble(2, s.dist)
-        else if (de9imMode) out.setLong(2, s.matL)
-        else {
-          out.setLong(2, packState(s))
-          out.setLong(3, s.covAM); out.setLong(4, s.covBM)
-          out.setLong(5, s.contAM); out.setLong(6, s.contBM)
-          out.setLong(7, s.eqAM); out.setLong(8, s.eqBM)
-        }
+        out.setLong(2, packState(s))
+        out.setLong(3, s.covAM); out.setLong(4, s.covBM)
+        out.setLong(5, s.contAM); out.setLong(6, s.contBM)
+        out.setLong(7, s.eqAM); out.setLong(8, s.eqBM)
+        out.setLong(9, s.matL); out.setDouble(10, s.dist)
         proj(out)
       }
 
@@ -1781,18 +1730,12 @@ object SpatialJoin {
           val e = pairIt.next(); writeState(e.getKey, e.getValue)
         }
       } else {
-        val em = new RelEmitter(distMode, de9imMode)
+        val em = new RelEmitter(cfg.mode)
         new Iterator[InternalRow] {
           private def fill(): Unit =
             while (!em.hasRow && pairIt.hasNext) {
               val e = pairIt.next()
-              if (distMode)
-                em.loadDist(e.getKey.a, e.getKey.b, e.getValue.dist, selfJoin)
-              else if (de9imMode)
-                em.loadMat(e.getKey.a, e.getKey.b, e.getValue.matL, selfJoin)
-              else
-                em.load(e.getKey.a, e.getKey.b,
-                  emissionMask(e.getValue, selfJoin))
+              em.loadState(e.getKey.a, e.getKey.b, e.getValue, selfJoin)
             }
           override def hasNext: Boolean = { fill(); em.hasRow }
           override def next(): InternalRow = { fill(); em.writeNext() }
@@ -1802,66 +1745,35 @@ object SpatialJoin {
     org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema)
   }
 
-  /** Merge partial rows and assemble relations: the fused kernel's
-    * partials, or the general path's flag rows projected into the same
-    * format by [[aggregate]].
+  /** Merge partial rows and assemble relations, in every mode: the fused
+    * kernel's partials, or the general path's flag rows projected into the
+    * same format by [[aggregate]].
+    *
+    * One exchange on the pair key, sized by [[exchangeParts]] from
+    * `rowHint` (never the session's partition conf), a Tungsten sort by it
+    * (spills at any size), then a streaming merge holding ONE group's
+    * state: rows of a pair arrive contiguous, and each closed group
+    * expands to its relation rows through [[RelEmitter]]. Grouping every
+    * row is what makes the merge serve both paths: a pair can have several
+    * rows even when both sides are single-part (two fanned copies of one
+    * flag row).
     *
     * NO distinct(): every output row is a function of exactly one
     * (gidA, gidB) group — the kernel orders (a, b) by gid for self joins
     * and by side otherwise, fanoutWith canonicalizes fanned rows the same
     * way, a == b never merges — and a group's forward/reverse emissions
-    * differ in orientation. Both directions via explode, not a
-    * self-union: a union planned the merge's whole input lineage once per
-    * branch. `rowHint` sizes the predicate merge's exchange as the
-    * kernel's ([[exchangeParts]]). */
+    * differ in orientation. */
   def aggregateFromPre(spark: SparkSession, pre: DataFrame,
       cfg: SpatialConfig, rowHint: Long = -1L): DataFrame = {
-    if (cfg.mode == "distance") {
-      val agg = pre.groupBy(col("gidA"), col("gidB"))
-        .agg(min(col("dist")).as("dist"))
-      return if (cfg.selfJoin)
-          agg.select(explode(array(
-              struct(col("gidA").as("a_id"), col("dist"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"), col("dist"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.dist"), col("r.b_id"))
-        else agg.select(col("gidA").as("a_id"), col("dist"),
-          col("gidB").as("b_id"))
-    }
-    if (cfg.mode == "de9im") {
-      // the unary-packed matrix (see packMat) makes the multi-sub merge a
-      // plain bit_or hash aggregate and the string decode a codegen'd
-      // projection — the whole stage stays in whole-stage codegen
-      val agg = pre.groupBy(col("gidA"), col("gidB"))
-        .agg(expr("bit_or(mat)").as("mat"))
-      return if (cfg.selfJoin)
-          agg.select(explode(array(
-              struct(col("gidA").as("a_id"),
-                matStrCol("mat", transposed = false).as("de9im"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"),
-                matStrCol("mat", transposed = true).as("de9im"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.de9im"), col("r.b_id"))
-        else agg.select(col("gidA").as("a_id"),
-          matStrCol("mat", transposed = false).as("de9im"),
-          col("gidB").as("b_id"))
-    }
-    // one exchange on the pair key, a Tungsten sort by it (spills at any
-    // size), then a streaming merge holding ONE group's state: rows of a
-    // pair arrive contiguous, and each closed group expands to its
-    // relation rows. Grouping every row is what makes the merge serve
-    // both paths: a pair can have several rows even when both sides are
-    // single-part (two fanned copies of one flag row).
     val selfJoin = cfg.selfJoin
+    val mode = cfg.mode
     val parted = pre.repartition(
         exchangeParts(spark.sparkContext.defaultParallelism, rowHint),
         col("gidA"), col("gidB"))
       .sortWithinPartitions(col("gidA"), col("gidB"))
     val rdd = parted.queryExecution.toRdd.mapPartitions { rows =>
       import org.apache.spark.sql.catalyst.InternalRow
-      val em = new RelEmitter(false)
+      val em = new RelEmitter(mode)
       new Iterator[InternalRow] {
         private val cur = new AggState
         private var curA: org.apache.spark.unsafe.types.UTF8String = _
@@ -1872,23 +1784,19 @@ object SpatialJoin {
             if (!rows.hasNext) {
               if (open) {
                 open = false
-                em.load(curA, curB, emissionMask(cur, selfJoin))
+                em.loadState(curA, curB, cur, selfJoin)
               } else return
             } else {
               val r = rows.next()
               val a = r.getUTF8String(0); val b = r.getUTF8String(1)
-              if (open && a.equals(curA) && b.equals(curB))
-                mergePacked(cur, r.getLong(2), r)
-              else {
-                val hadGroup = open
-                val m = if (hadGroup) emissionMask(cur, selfJoin) else 0
-                val pa = curA; val pb = curB
+              if (!open || !a.equals(curA) || !b.equals(curB)) {
+                // close the previous group before its state is reset
+                if (open) em.loadState(curA, curB, cur, selfJoin)
                 cur.reset()
                 curA = a.clone(); curB = b.clone()
                 open = true
-                mergePacked(cur, r.getLong(2), r)
-                if (hadGroup) em.load(pa, pb, m)
               }
+              mergePacked(cur, r.getLong(2), r)
             }
           }
         }
@@ -1896,7 +1804,7 @@ object SpatialJoin {
         override def next(): InternalRow = { fill(); em.writeNext() }
       }
     }
-    org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, relRowSchema)
+    org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, relSchema(mode))
   }
 
   /** Relations of the fused kernel: FINAL rows straight from the kernel

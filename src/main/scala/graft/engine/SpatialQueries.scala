@@ -433,7 +433,7 @@ object SpatialQueries {
        |SELECT a_gid, $mat AS mat, b_gid FROM p""".stripMargin
   }
 
-  /** The de9im aggregation path (fused packed-matrix kernel + bit_or
+  /** The de9im aggregation path (fused packed-matrix kernel + OR
     * merge) under a hash-exact DuckDB oracle: same rectangle set as
     * [[spRectRelate]], mode=de9im. Per ordered intersecting pair the
     * engine emits the full 9-char matrix; the twin derives each cell in
@@ -577,7 +577,7 @@ object SpatialQueries {
   }
 
   /** The same multi variant set in DE-9IM mode: gates the packed-matrix
-    * `bit_or` multi-sub merge (cellwise unary-monotone max) plus the
+    * OR multi-sub merge (cellwise unary-monotone max) plus the
     * transposed reverse emission. The twin is the cellwise max of the
     * sqlRectDe9im single-box closed forms over the pair's
     * BBOX-INTERSECTING part pairs ONLY — the reference's sweep semantics:

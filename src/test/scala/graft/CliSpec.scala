@@ -71,6 +71,31 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("--within-distance writes the reference's 4-decimal distance text") {
+    // the reference's util::formatFloat(dist, 4) (Sweeper.cpp:2378-2380)
+    import graft.engine.FixtureSpec.fmtDist
+    val poly = "POLYGON((0 0,0.01 0,0.01 0.01,0 0.01,0 0))"
+    val far = "POINT(0.0213 0.0047)"
+    val in = tmpFile(Seq(s"poly\t$poly", "pt\tPOINT(0.005 0.005)",
+      s"far\t$far"))
+    val out = java.nio.file.Files.createTempDirectory("clidist")
+      .resolve("rels").toString
+    val a = SpatialJoinCli.parseArgs(Seq(in, "--within-distance", "1300",
+      "-o", out))
+    val (g, r, cfg) = SpatialJoinCli.readInputs(spark, a)
+    RelationText.write(SpatialJoin.run(spark, g, r, cfg), a.output, cfg, a.fmt)
+    val bytes = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      .mkString
+    val got = bytes.split("\n").filter(_.nonEmpty).toSet
+    val d = graft.geom.Dist.geomDist(graft.geom.Wkt.parseWkt(poly).head,
+      graft.geom.Wkt.parseWkt(far).head)
+    assert(d > 1000 && d <= 1300, s"d=$d")
+    assert(got == Set("poly\t0\tpt", "pt\t0\tpoly",
+      s"poly\t${fmtDist(d)}\tfar", s"far\t${fmtDist(d)}\tpoly"), got)
+  }
+
   test("explicit per-line sides override the file index in two-file mode") {
     // the reference passes the file index only as the DEFAULT side
     // (WKTParse.h:139): a 3-field line inside either file keeps its

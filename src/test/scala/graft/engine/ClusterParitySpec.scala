@@ -32,6 +32,7 @@ import scala.io.Source
   * spark-submit would normally inject.
   */
 class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+  import FixtureSpec.fmtDist
 
   /** SynthGeo size for the run()-level leg; GRAFT_CLUSTER_N=1000000 is the
     * recorded large-probe configuration (BASELINE.md). */
@@ -72,13 +73,6 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     require(in != null, s"missing resource $path")
     val src = Source.fromInputStream(in, "UTF-8")
     try src.getLines().toList finally src.close()
-  }
-
-  /** reference formatFloat(dist, 4) — same rule as FixtureSpec. */
-  private def fmtDist(d: Double): String = {
-    val s = f"$d%.4f"
-    val t = s.reverse.dropWhile(_ == '0').reverse
-    if (t.endsWith(".")) t.dropRight(1) else t
   }
 
   private def cfgFor(dataset: String, mode: String): SpatialConfig = {

@@ -575,12 +575,13 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val custom = RelationText.lines(rels, cfg, fmt).collect().toSet
     assert(custom.contains("<big|C|small>"), custom)
     assert(custom.contains("<small|I|big>"), custom)
-    // distance mode renders std::to_string-style fixed 6 decimals
+    // distance mode renders the reference's formatFloat(dist, 4): at most
+    // 4 decimals, no trailing zero, no trailing dot
     val dCfg = SpatialConfig(mode = "distance", withinDist = 500000.0)
     val dRels = SpatialJoin.run(spark, geoms, refs, dCfg)
     val dLines = RelationText.lines(dRels, dCfg).collect()
-    assert(dLines.nonEmpty &&
-      dLines.forall(_.matches(".+\t\\d+\\.\\d{6}\t.+")), dLines.toSeq)
+    assert(dLines.nonEmpty && dLines.forall(
+      _.matches(".+\t(0|[1-9]\\d*)(\\.\\d{0,3}[1-9])?\t.+")), dLines.toSeq)
     // -o out.gz / out.bz2: codec round-trip through the text sink
     for (ext <- Seq("gz", "bz2")) {
       val path = java.nio.file.Files.createTempDirectory("graftout")
@@ -661,9 +662,9 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fused path plans its exchanges without the session's partition conf") {
-    // run() with spark.sql.shuffle.partitions at 1 and at 200: the kernel
-    // and merge exchanges carry exchangeParts' count both times, and the
-    // relations are the same multiset
+    // run() with spark.sql.shuffle.partitions at 1 and at 200, in every
+    // mode: the kernel and merge exchanges carry exchangeParts' count both
+    // times, and the relations are the same multiset
     val s = spark
     import s.implicits._
     import org.apache.spark.ShuffleDependency
@@ -688,24 +689,53 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     try {
-      for ((geoms, exchanges) <- Seq(multi -> 2, plain -> 1)) {
+      for (cfg <- Seq(SpatialConfig(),
+          SpatialConfig(mode = "distance", withinDist = 2500),
+          SpatialConfig(mode = "de9im"));
+          (geoms, exchanges) <- Seq(multi -> 2, plain -> 1)) {
         val runs = Seq("1", "200").map { parts =>
           s.conf.set(key, parts)
-          val df = SpatialJoin.run(s, geoms, refs)
+          val df = SpatialJoin.run(s, geoms, refs, cfg)
           val rdd = df.queryExecution.toRdd
           assert(shuffleParts(rdd) == Seq.fill(exchanges)(want),
-            s"conf $parts, $exchanges exchanges")
-          assert(rdd.getNumPartitions == want, s"conf $parts")
-          df.as[(String, String, String)].collect().sorted.toSeq
+            s"${cfg.mode}: conf $parts, $exchanges exchanges")
+          assert(rdd.getNumPartitions == want, s"${cfg.mode}: conf $parts")
+          df.selectExpr("a_id", "cast(" + df.columns(1) + " as string)",
+            "b_id").as[(String, String, String)].collect().sorted.toSeq
         }
         assert(runs.head.nonEmpty)
-        assert(runs(0) == runs(1), s"relations differ ($exchanges exchanges)")
+        assert(runs(0) == runs(1),
+          s"${cfg.mode}: relations differ ($exchanges exchanges)")
         if (exchanges == 2) assert(runs.head.exists(_._1.startsWith("m")))
       }
     } finally {
       s.conf.set(key, prev)
       multi.unpersist(); plain.unpersist()
     }
+  }
+
+  test("P9 line copies: contains both ways through the alias self check") {
+    // two identical 3-point lines. With dedup forced (dupMinPoints = 0,
+    // as in the reference's tests) the copy becomes an alias of its
+    // keeper and takes the keeper's self relations (SURVEY A10, the
+    // reference's selfCheck), which include contains. Without dedup the
+    // pair runs through the exact kernel, where a line never contains a
+    // line. Whether the reference itself reports contains here is not
+    // verified (its source is not at hand); this pins the current output
+    // so that any change to it is deliberate.
+    val s = spark
+    import s.implicits._
+    val (geoms, refs) = Model.parseLines(s, s.createDataset(Seq(
+      "l1\tLINESTRING(0 0,1 1,2 0)", "l2\tLINESTRING(0 0,1 1,2 0)")))
+    def rels(dupMinPoints: Int): Set[(String, String, String)] =
+      SpatialJoin.run(s, geoms, refs, SpatialConfig(dupMinPoints = dupMinPoints))
+        .as[(String, String, String)].collect().toSet
+    def bothWays(p: String) = Set(("l1", p, "l2"), ("l2", p, "l1"))
+    val dedup = rels(0)
+    assert(bothWays("contains").subsetOf(dedup), dedup)
+    val exact = rels(-1)
+    assert((bothWays("equals") ++ bothWays("covers")).subsetOf(exact), exact)
+    assert(!exact.exists(_._2 == "contains"), exact)
   }
 
   test("sort merge == general path on multi-geometries") {
@@ -737,8 +767,8 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(sortM == general, s"$ds sort merge diverges: " +
         s"+${(sortM -- general).take(5)} -${(general -- sortM).take(5)}")
       assert(sortM.nonEmpty)
-      // de9im on the same multi-sub fixtures: the fused kernel's unary
-      // bit_or matrix merge must equal the general path's on pairs whose
+      // de9im on the same multi-sub fixtures: the merge's unary OR of the
+      // kernel's matrices must equal the general path's on pairs whose
       // sub-matrices really merge
       def matRels(df: org.apache.spark.sql.DataFrame) =
         df.selectExpr("a_id", "cast(de9im as string)", "b_id")

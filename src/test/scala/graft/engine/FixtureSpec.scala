@@ -15,6 +15,7 @@ import scala.io.Source
   * (dataset, mode) runs once.
   */
 class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import FixtureSpec.fmtDist
 
   private var spark: SparkSession = _
 
@@ -35,14 +36,6 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     require(in != null, s"missing resource $path")
     val src = Source.fromInputStream(in, "UTF-8")
     try src.getLines().toList finally src.close()
-  }
-
-  /** reference formatFloat(dist, 4): fixed 4 decimals, trailing zeros and
-    * dot trimmed (util, used at Sweeper.cpp:2378). */
-  private def fmtDist(d: Double): String = {
-    val s = f"$d%.4f"
-    val t = s.reverse.dropWhile(_ == '0').reverse
-    if (t.endsWith(".")) t.dropRight(1) else t
   }
 
   private val cache = scala.collection.mutable.Map.empty[(String, String), Set[String]]
@@ -246,5 +239,15 @@ class FixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rels.contains("linestring7 crosses polygon2"))
     assert(rels.contains("linestring8 crosses polygon1"))
     assert(rels.contains("polygon1 covers linestring6"))
+  }
+}
+
+object FixtureSpec {
+  /** reference formatFloat(dist, 4): fixed 4 decimals, trailing zeros and
+    * dot trimmed (util, used at Sweeper.cpp:2378). */
+  def fmtDist(d: Double): String = {
+    val s = f"$d%.4f"
+    val t = s.reverse.dropWhile(_ == '0').reverse
+    if (t.endsWith(".")) t.dropRight(1) else t
   }
 }
